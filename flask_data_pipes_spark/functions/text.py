@@ -86,26 +86,29 @@ def bpe_ish_token_count(c: ColumnOrName) -> Column:
     return F.coalesce(F.regexp_count(c, F.lit(pat)), F.lit(0)).cast("long")
 
 
-def char_ngrams(
-    c: ColumnOrName, n: int = 5, lowered: "Column | None" = None
-) -> Column:
+def _offsets(count: Column) -> Column:
+    """1..count as array<int>; empty when count < 1. A bare
+    `sequence(1, count)` counts DOWN for count < 1 (`sequence(1, 0)` is
+    [1, 0]), which would shingle short input. Matches the oracles'
+    `range(1, count + 1)`."""
+    return F.when(count >= 1, F.sequence(F.lit(1), count)).otherwise(
+        F.array().cast("array<int>")
+    )
+
+
+def char_ngrams(c: ColumnOrName, n: int = 5) -> Column:
     """Character n-gram (shingle) array over the lowercased text.
 
-    Built-ins only: sequence over offsets + transform/substring. Used by
-    MinHash and Jaccard dedup. Empty/short text → empty array.
-
-    `lowered` (an ALREADY-PROJECTED lowercased-text column) lets hot
-    paths stage the lowercase once: the lambda body embeds its input
-    expression textually and higher-order lambdas get no subexpression
-    elimination, so an inline `lower(text)` re-lowers the WHOLE document
-    once per shingle — O(len²) per row. With a projected column the
-    per-shingle body is substring over a bound reference.
+    Built-ins only: sequence over offsets + transform/substring.
+    Empty/short/null text → empty array. The lambda body embeds
+    `lower(c)` and higher-order lambdas get no subexpression
+    elimination, so each shingle re-lowers the document: per-row work
+    is O(len²). Hot paths shingle with an explode over the offsets
+    instead (see operators.dedup.minhash_bands).
     """
-    c = lowered if lowered is not None else F.lower(_col(c))
-    length = F.length(c)
-    count = F.greatest(length - F.lit(n - 1), F.lit(0))
+    c = F.lower(_col(c))
     return F.transform(
-        F.sequence(F.lit(1), count),
+        _offsets(F.length(c) - F.lit(n - 1)),
         lambda i: F.substring(c, i, n),
     )
 
@@ -113,18 +116,18 @@ def char_ngrams(
 def word_shingles(
     c: ColumnOrName, k: int = 3, toks: "Column | None" = None
 ) -> Column:
-    """Word k-shingles (space-joined) for n-gram Jaccard dedup.
+    """Word k-shingles (space-joined) for n-gram Jaccard dedup; fewer
+    than k tokens → empty array.
 
     `toks` (pre-computed lowered whitespace tokens, ALREADY PROJECTED to
-    a column) is the same staging contract as `char_ngrams(lowered=)`:
-    without it the whole `split(trim(lower(text)))` tree sits inside the
-    per-index lambda and re-tokenizes the document once per shingle —
-    O(tokens × len) per row."""
+    a column) stages the tokenization once: without it the whole
+    `split(trim(lower(text)))` tree sits inside the per-index lambda and
+    re-tokenizes the document once per shingle — O(tokens × len) per
+    row."""
     if toks is None:
         toks = whitespace_tokens(F.lower(_col(c)))
-    count = F.greatest(F.size(toks) - F.lit(k - 1), F.lit(0))
     return F.transform(
-        F.sequence(F.lit(1), count),
+        _offsets(F.size(toks) - F.lit(k - 1)),
         lambda i: F.array_join(F.slice(toks, i, k), " "),
     )
 

@@ -8,8 +8,10 @@ that scale to 100 TB:
   blocking keys; the self-join is an equi-join on the bucket id, so
   cost is linear in corpus size + Σ bucket², and AQE splits skewed
   buckets at runtime.
-- **Signatures are map-side.** Shingling, hashing, min-reduction all
-  happen inside codegen per row; only (id, bucket) pairs shuffle.
+- **Signatures are codegen'd.** Shingling, hashing and the min-reduction
+  run under whole-stage codegen. The min-reduction is an id-keyed
+  aggregate over the spread's partitioning; beyond (id, bucket) pairs,
+  at most one partial signature row per doc shuffles.
 - **Deterministic hashing** (md5-based, see functions.text.md5_long*)
   so results are reproducible and oracle-checkable cross-engine.
 
@@ -379,12 +381,33 @@ def minhash_bands(
     """(id, band, band_key): MinHash signature banded for LSH.
 
     The k-hash family is affine over two 56-bit base hashes (h1 + i*h2)
-    carved from the two halves of ONE md5 digest per shingle — md5 is
-    the only non-trivial per-shingle cost, and higher-order-function
-    lambdas get no subexpression elimination, so the digest is
-    materialized in its own projection and each half is a cheap
-    substring parse. 56-bit bases keep h1 + 7*h2 < 2^59, overflow-free
-    under ANSI in both engines.
+    carved from the two halves of ONE md5 digest per shingle; 56-bit
+    bases keep h1 + 7*h2 < 2^59, overflow-free under ANSI in both
+    engines. A band's key is the seed-99 `md5_long` of its signature
+    slots joined with '_'.
+
+    Kernel shape: one row per shingle offset, then one aggregate.
+    lower(text) → explode(sequence(1, length - n + 1)) over the offsets
+    → md5(seed | substring) → the two digest halves → groupBy(id) with
+    one `min(h1 + i*h2)` per slot → `inline` of one (band, band_key)
+    struct per band. Every stage is written as SQL expression strings,
+    which keeps driver-side plan building to a few py4j calls, and none
+    holds a higher-order lambda, so the whole kernel runs under
+    whole-stage codegen; an `array_min(transform())` per slot would be
+    interpreted and rescan the shingle array once per hash. Min over all offsets equals min over distinct shingles, so
+    repeated shingles need no `array_distinct`.
+
+    The aggregate is keyed by id, which `spread_for_cpu`'s
+    hashpartitioning(id) already satisfies: with the spread it adds no
+    Exchange. When the spread is a no-op (enough scan splits) it adds
+    one small Exchange — partial aggregation leaves one row of
+    `n_hashes` longs per document, since all of a document's offsets
+    come from one input row.
+
+    Ids identify documents (every caller keys on them downstream): rows
+    sharing an id are banded as one document over the union of their
+    shingles. Rows with null text or text shorter than `shingle_n`
+    produce no bands.
 
     `seed` prefixes the digest input, selecting the hash family draw.
     Every seed is equally valid; candidate volume varies ±30% across
@@ -394,71 +417,38 @@ def minhash_bands(
     seed by measuring on the corpus you gate against.
     """
     assert n_hashes % band_size == 0
-    # Lowered text staged in its own projection (round 15): inline, the
-    # `lower(text)` subtree sits INSIDE char_ngrams' per-offset lambda
-    # and re-lowers the whole document once per shingle (O(len²)/row —
-    # lambdas get no subexpression elimination). The column is
-    # referenced twice downstream (length + lambda), so CollapseProject
-    # keeps the stage; per-shingle work drops to substring over a bound
-    # reference.
-    shingles = F.array_distinct(
-        T.char_ngrams(text_col, shingle_n, lowered=F.col("__lt"))
-    )
-    digests = F.transform(
-        F.col("__shingles"),
-        lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)),
-    )
-    hs = F.transform(
-        F.col("__digests"),
-        lambda d: F.struct(
-            F.conv(F.substring(d, 1, 14), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 15, 14), 16, 10).cast("long").alias("h2"),
-        ),
-    )
+    i_q, t_q = f"`{id_col}`", f"`{text_col}`"
 
-    def sig_term(i: int) -> Column:
-        return F.array_min(
-            F.transform(
-                F.col("__hs"), lambda p: p.getField("h1") + F.lit(i) * p.getField("h2")
-            )
+    def band(b: int) -> str:
+        slots = ", ".join(
+            f"CAST(__s{b * band_size + j} AS STRING)" for j in range(band_size)
         )
+        key = (
+            f"CAST(conv(substring(md5(concat('99|', concat_ws('_', {slots}))), "
+            "1, 15), 16, 10) AS BIGINT)"
+        )
+        return f"named_struct('band', CAST({b} AS BIGINT), 'band_key', {key})"
 
-    sig = F.array(*[sig_term(i) for i in range(n_hashes)])
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                T.md5_long(
-                    F.concat_ws(
-                        "_",
-                        *[
-                            F.element_at("__sig", b * band_size + j + 1).cast("string")
-                            for j in range(band_size)
-                        ],
-                    ),
-                    99,
-                ).alias("band_key"),
-            )
-            for b in range(n_hashes // band_size)
-        ]
-    )
-    # `length >= n` ⟺ `size(shingles) > 0` (and null-rejecting), but is
-    # cheap enough to sit in the scan stage: a size()-on-shingles filter
-    # would be pushed below the repartition by Catalyst and compute every
-    # shingle array in the (possibly single-task) scan.
+    bands = ", ".join(band(b) for b in range(n_hashes // band_size))
+    # `length >= n` is cheap enough to sit in the scan stage and
+    # guarantees at least one offset (lower() never shortens text).
     return (
         spread_for_cpu(df.filter(F.length(text_col) >= shingle_n), id_col)
-        .select(id_col, F.lower(F.col(text_col)).alias("__lt"))
-        .select(id_col, shingles.alias("__shingles"))
-        .select(id_col, digests.alias("__digests"))
-        .select(id_col, hs.alias("__hs"))
-        .select(id_col, sig.alias("__sig"))
-        .select(id_col, F.explode(bands).alias("__b"))
-        .select(
-            id_col,
-            F.col("__b.band").alias("band"),
-            F.col("__b.band_key").alias("band_key"),
+        .selectExpr(i_q, f"lower({t_q}) AS __lt")
+        .selectExpr(
+            i_q, "__lt", f"explode(sequence(1, length(__lt) - {shingle_n - 1})) AS __off"
         )
+        .selectExpr(
+            i_q, f"md5(concat('{seed}|', substring(__lt, __off, {shingle_n}))) AS __d"
+        )
+        .selectExpr(
+            i_q,
+            "CAST(conv(substring(__d, 1, 14), 16, 10) AS BIGINT) AS __h1",
+            "CAST(conv(substring(__d, 15, 14), 16, 10) AS BIGINT) AS __h2",
+        )
+        .groupBy(id_col)
+        .agg(*[F.expr(f"min(__h1 + {i} * __h2) AS __s{i}") for i in range(n_hashes)])
+        .selectExpr(i_q, f"inline(array({bands}))")
     )
 
 

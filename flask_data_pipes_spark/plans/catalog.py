@@ -56,7 +56,8 @@ def register(name: str, oracle: Optional[str] = None):
     return deco
 
 
-# Resolved-relation cache: (session, sf_dir, table) → lazy DataFrame.
+# Resolved-relation cache: (session, sf_dir, table) → (staleness token,
+# lazy DataFrame).
 # Optimization round 16: `spark.read.parquet` re-reads the footer for
 # schema on EVERY call (~50-100 ms of driver-side metadata work), and
 # the headline bench builds each query 3× with 1-3 load() calls each —
@@ -67,9 +68,24 @@ def register(name: str, oracle: Optional[str] = None):
 # planning (splits, pushdown) still happens per action from current
 # confs. Keyed weakly on the session so a stopped session's relations
 # are collectable; per-process, so a fresh driver process starts cold.
+# Each entry carries the table path's staleness token: a table rewritten
+# in place (new mtime or size) is re-resolved, never served from a stale
+# file listing.
 from weakref import WeakKeyDictionary as _WeakKeyDictionary
 
 _RELATION_CACHE: "_WeakKeyDictionary" = _WeakKeyDictionary()
+
+
+def _staleness_token(path: str) -> "tuple[int, int] | None":
+    """(mtime_ns, size) of a local table path — one `os.stat`. None for
+    a URI or a missing path, which is then never cached."""
+    import os
+
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -87,17 +103,19 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cache = _RELATION_CACHE.setdefault(spark, {})
-    key = (sf_dir, table)
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
+    path = f"{sf_dir}/{table}.parquet"
+    token = _staleness_token(path)
+    hit = cache.get((sf_dir, table))
+    if token is not None and hit is not None and hit[0] == token:
+        return hit[1]
     from ..session import ensure_package_on_executors
 
     ensure_package_on_executors(spark)
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    df = spark.read.parquet(path)
     if table == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    cache[key] = df
+    if token is not None:
+        cache[(sf_dir, table)] = (token, df)
     return df
 
 

@@ -545,9 +545,11 @@ def llm_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     bases keep h1 + 7*h2 < 2^59, overflow-free under ANSI in both
     engines.
 
-    Scale: per-row expression work only; signatures never leave the
-    executor; the band table is 4x doc count, partitioned by band_key
-    downstream.
+    Scale: one explode over shingle offsets and one min-aggregate keyed
+    by doc_id, all under whole-stage codegen. The aggregate reuses the
+    spread's hashpartitioning(doc_id); when the spread is a no-op it
+    shuffles one partially aggregated row of 8 longs per doc. The band
+    table is 4x doc count, partitioned by band_key downstream.
     """
     from ..operators import dedup
 

@@ -2,12 +2,14 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+_DRIVER_MEMORY = "6g"
 
 
 @pytest.fixture(scope="session")
@@ -39,13 +41,22 @@ def spark():
         # 1g driver heap OOMed at test ~950 of the round-15 full run
         # (AppStatusStore + listener state accumulate even with the UI
         # off — trim what it retains and give the heap room).
-        .config("spark.driver.memory", "6g")
+        .config("spark.driver.memory", _DRIVER_MEMORY)
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "1000")
         .config("spark.sql.ui.retainedExecutions", "50")
         .getOrCreate()
     )
+    # driver memory only applies when this call launches the JVM; a
+    # session built earlier in the process keeps its own heap
+    got = s.sparkContext.getConf().get("spark.driver.memory")
+    if got != _DRIVER_MEMORY:
+        warnings.warn(
+            f"spark.driver.memory is {got!r}, not the requested "
+            f"{_DRIVER_MEMORY!r}: the JVM already existed",
+            RuntimeWarning,
+        )
     yield s
 
 

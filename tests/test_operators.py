@@ -230,6 +230,39 @@ def test_decontaminate_gram_df_cap(spark):
     assert capped[2]["n_test_docs"] == 1
 
 
+def test_shingles_of_short_input_are_empty(spark):
+    """`sequence(1, 0)` is [1, 0], not empty: text shorter than one
+    shingle must give no shingles (not the whole text twice) and fewer
+    than k tokens must not reach slice(toks, 0, k), which raises."""
+    from flask_data_pipes_spark.functions import text as T
+
+    df = spark.createDataFrame(
+        [("abc",), ("abcde",), ("",), (None,), ("one two",), ("one two three",)],
+        "t string",
+    )
+    rows = df.select(
+        T.char_ngrams("t", 5).alias("c"), T.word_shingles("t", 3).alias("w")
+    ).collect()
+    assert [r["c"] for r in rows[:4]] == [[], ["abcde"], [], []]
+    assert [r["w"] for r in rows] == [[], [], [], [], [], ["one two three"]]
+
+
+def test_decontaminate_short_train_document(spark):
+    """A train document with fewer than k tokens has no k-grams: it is
+    never flagged, and it must not fail the plan."""
+    from flask_data_pipes_spark.operators.corpus import decontaminate
+
+    train = spark.createDataFrame(
+        [(1, "three token doc"), (2, "alpha beta gamma delta epsilon zeta")],
+        ["doc_id", "text"],
+    )
+    test = spark.createDataFrame(
+        [(10, "alpha beta gamma delta epsilon zeta eta")], ["doc_id", "text"]
+    )
+    flagged = {r["doc_id"] for r in decontaminate(train, test, k=5).collect()}
+    assert flagged == {2}
+
+
 def test_semdedup_sizing_triggers_no_spark_job(spark):
     """Supplying either n_planes or n_rows must keep semdedup_keep
     fully lazy — zero Spark jobs during plan construction (the

@@ -106,6 +106,31 @@ def test_minhash_pairs_scans_input_once(spark, sf_dir):
     assert plan.count("Exchange") <= 4
 
 
+@pytest.mark.parametrize("scale", ["sf0.001", "sf0.1"])
+@pytest.mark.parametrize(
+    "name,n_exchanges",
+    [
+        ("llm_minhash_bands", 1),
+        ("llm_minhash_pairs", 3),
+        ("llm_minhash_dedup_keep", 5),
+    ],
+)
+def test_minhash_kernel_plan_shape(spark, sf_dir, scale, name, n_exchanges):
+    """The MinHash kernel is one codegen'd explode -> min-aggregate pass:
+    no higher-order lambda in the band plan, and the id-keyed aggregate
+    reuses the spread's hashpartitioning(id), so the MinHash consumers
+    keep their Exchange counts (bands: the spread alone)."""
+    import os
+
+    scale_dir = os.path.join(os.path.dirname(sf_dir), scale)
+    if not os.path.isdir(scale_dir):
+        pytest.skip(f"no {scale} testdata")
+    plan = _plan(spark, scale_dir, name)
+    if name == "llm_minhash_bands":
+        assert "lambdafunction" not in plan, plan
+    assert plan.count("Exchange") == n_exchanges, plan
+
+
 def test_cosine_topk_broadcasts_queries(spark, sf_dir):
     """Brute-force top-k must broadcast the query set (Q×N, linear in
     corpus) — the corpus side never shuffles for the join."""
@@ -414,6 +439,7 @@ def test_jaccard_pairs_single_scan_no_joins(spark, sf_dir):
         ("llm_decontaminate", "split(trim(lower(", 2),  # train + test side
         ("llm_ngram_topk", "split(trim(lower(", 1),
         ("llm_minhash_pairs", "lower(text", 1),
+        ("llm_minhash_bands", "lower(text", 1),
     ],
 )
 def test_tokenize_staged_once(spark, sf_dir, name, pattern, max_count):
@@ -731,3 +757,19 @@ def test_html_extract_oracle_ws_class_matches_python_split():
             continue
         s = f"a{chr(i)}b"
         assert ddb(s) == " ".join(s.split()) == s, hex(i)
+
+
+def test_load_rereads_table_rewritten_in_session(spark, tmp_path):
+    """The resolved-relation cache keys on the table path's staleness
+    token: a table rewritten inside one session is read back fresh, not
+    through the first read's file listing."""
+    from flask_data_pipes_spark.plans.catalog import load
+
+    sf = str(tmp_path)
+    spark.range(3).write.parquet(f"{sf}/t.parquet")
+    first = load(spark, sf, "t")
+    assert first.count() == 3
+    assert load(spark, sf, "t") is first  # unchanged table: cache hit
+    spark.range(10, 15).write.mode("overwrite").parquet(f"{sf}/t.parquet")
+    again = load(spark, sf, "t")
+    assert sorted(r["id"] for r in again.collect()) == [10, 11, 12, 13, 14]

@@ -775,3 +775,76 @@ def test_asof_join_directions_match_pandas(spark, lefts, rights, direction, tol)
         assert got[row["lid"]] == (want_rts, want_pay), (
             direction, tol, row["lid"], got[row["lid"]], (want_rts, want_pay),
         )
+
+
+def _minhash_reference(rows, n_hashes, band_size, shingle_n, seed):
+    """Pure-Python MinHash banding: str.lower(), code-point shingles,
+    md5 of '<seed>|<shingle>' split into two 56-bit halves, slot i =
+    min(h1 + i*h2), band key = md5_long seed 99 of the '_'-joined
+    band slots. Null and shorter-than-shingle texts band to nothing."""
+    import hashlib
+
+    def md5_hex(s):
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+    out = []
+    for doc_id, text in rows:
+        if text is None or len(text) < shingle_n:
+            continue
+        lt = text.lower()
+        hs = [
+            (int(d[:14], 16), int(d[14:28], 16))
+            for d in (
+                md5_hex(f"{seed}|{lt[o:o + shingle_n]}")
+                for o in range(len(lt) - shingle_n + 1)
+            )
+        ]
+        sig = [min(h1 + i * h2 for h1, h2 in hs) for i in range(n_hashes)]
+        for b in range(n_hashes // band_size):
+            key = "_".join(str(v) for v in sig[b * band_size:(b + 1) * band_size])
+            out.append((doc_id, b, int(md5_hex(f"99|{key}")[:15], 16)))
+    return sorted(out)
+
+
+# case-stable alphabet (see case_stable_texty): ASCII, accented Latin-1,
+# caseless CJK and non-BMP emoji (one code point, two UTF-16 units)
+_minhash_text = st.one_of(
+    st.none(),
+    st.text(alphabet="abAB xyZ.éÉüÜßøÖ中文字漢😀🎉𝔘", max_size=30),
+    # heavily repeated shingles
+    st.builds(lambda u, k: u * k, st.sampled_from(["ab", "abc ", "é中", "😀a"]),
+              st.integers(1, 30)),
+)
+
+
+@given(
+    st.lists(_minhash_text, min_size=1, max_size=25),
+    st.sampled_from([(8, 2, 5, 1), (6, 3, 3, 7), (4, 4, 1, 2)]),
+)
+@settings(**_SETTINGS)
+def test_minhash_bands_match_python_reference(spark, texts, params):
+    from flask_data_pipes_spark.operators import dedup
+
+    n_hashes, band_size, shingle_n, seed = params
+    # fixed edge rows: exactly shingle_n chars, one short, null, repeats
+    edge = ["x" * shingle_n, "😀" * shingle_n, "é" * (shingle_n - 1), None, "ab" * 40]
+    rows = list(enumerate(edge + texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    bands = dedup.minhash_bands(
+        df, "text", "doc_id", n_hashes=n_hashes, band_size=band_size,
+        shingle_n=shingle_n, seed=seed,
+    )
+    assert bands.schema.simpleString() == (
+        "struct<doc_id:bigint,band:bigint,band_key:bigint>"
+    )
+    got = sorted(tuple(r) for r in bands.collect())
+    assert got == _minhash_reference(rows, n_hashes, band_size, shingle_n, seed)
+
+
+@given(st.lists(case_stable_texty, min_size=1, max_size=25), st.integers(1, 6))
+@settings(**_SETTINGS)
+def test_char_ngrams_match_python(spark, vals, n):
+    got = _run(spark, vals, T.char_ngrams("v", n), "array<string>")
+    for g, v in zip(got, vals):
+        lt = "" if v is None else v.lower()
+        assert g == [lt[i:i + n] for i in range(len(lt) - n + 1)]

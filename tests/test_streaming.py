@@ -98,16 +98,20 @@ def test_sessionize_stream_closes_sessions(spark, landing, tmp_path):
         .start()
     )
     deadline = _t.time() + 120
+    drained = False
     while _t.time() < deadline:
         progress = q.recentProgress
         if (
             any(p["numInputRows"] > 0 for p in progress)
             and progress[-1]["numInputRows"] == 0
         ):
+            drained = True
             break
         _t.sleep(0.5)
     q.stop()
     q.awaitTermination(30)
+    if not drained:
+        pytest.fail("stream did not drain data batches within 120s")
     got = spark.sql("select * from sessions_out").collect()
 
     batch = sessionize_batch(
