@@ -103,8 +103,10 @@ class Field:
         """Compile to a Column over the input DataFrame.
 
         Missing source column → NULL of the field's type (lenient: the
-        reference's marshmallow dump tolerates absent keys; JSON readers
-        also drop all-null columns at inference time)."""
+        reference's marshmallow dump tolerates absent keys). Spark's
+        JSON writer omits null fields, so schema inference loses a
+        column that is null in every row; pipeline stages read their
+        own staged files with the writer's schema sidecar and keep it."""
         if self.source not in df.columns:
             return F.lit(None).cast(self.spark_type)
         return self._serialize(F.col(self.source), self._dtype(df))

@@ -73,7 +73,16 @@ def cosine_topk(
     Per-pair cost is ONE dot product: 1/norm is precomputed per row in
     projections *under* the join (a materialization barrier Catalyst
     cannot collapse through), so cosine = dot·inv_q·inv_c — vs
-    recomputing both norms for every (query, candidate) pair."""
+    recomputing both norms for every (query, candidate) pair.
+
+    Self-match exclusion (contract, shared by `cosine_topk`,
+    `cosine_topk_vectorized` and `lsh_topk`): a candidate whose
+    `id_col` equals the query's `query_id_col` is never returned, so a
+    query drawn from the corpus does not rank itself first. Every
+    catalog oracle carries the same `qid <> vec_id` predicate. The test
+    is on ids alone: a query whose id collides with an unrelated corpus
+    id loses that candidate too, so give foreign queries ids disjoint
+    from the corpus."""
     q = queries.select(
         F.col(query_id_col),
         F.col(vec_col).cast("array<double>").alias("__qv"),
@@ -118,7 +127,16 @@ def cosine_topk_vectorized(
     broadcast join version has); each corpus partition computes
     batch×Q sims and keeps a running per-partition top-k per query, so
     the shuffle carries only n_partitions·Q·k rows into the final
-    window — at 100 TB the scan dominates and nothing else grows."""
+    window — at 100 TB the scan dominates and nothing else grows.
+
+    Self-match exclusion (contract, shared by `cosine_topk`,
+    `cosine_topk_vectorized` and `lsh_topk`): a candidate whose
+    `id_col` equals the query's `query_id_col` is never returned, so a
+    query drawn from the corpus does not rank itself first. Every
+    catalog oracle carries the same `qid <> vec_id` predicate. The test
+    is on ids alone: a query whose id collides with an unrelated corpus
+    id loses that candidate too, so give foreign queries ids disjoint
+    from the corpus."""
     import heapq
 
     q_rows = queries.select(query_id_col, vec_col).collect()
@@ -751,7 +769,16 @@ def lsh_topk(
     (corpus rows fan out T-ways into the equi-join — still linear);
     duplicate (query, candidate) collisions across tables are deduped
     BEFORE ranking. Composes with `n_probe` (probing applies per
-    table)."""
+    table).
+
+    Self-match exclusion (contract, shared by `cosine_topk`,
+    `cosine_topk_vectorized` and `lsh_topk`): a candidate whose
+    `id_col` equals the query's `query_id_col` is never returned, so a
+    query drawn from the corpus does not rank itself first. Every
+    catalog oracle carries the same `qid <> vec_id` predicate. The test
+    is on ids alone: a query whose id collides with an unrelated corpus
+    id loses that candidate too, so give foreign queries ids disjoint
+    from the corpus."""
     tables = [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
     n_probe = min(n_probe, n_planes + 1)
     # round-15 measured note: a spread_for_cpu here LOSES ~0.35 s at

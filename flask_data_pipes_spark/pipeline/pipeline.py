@@ -25,18 +25,26 @@ Scale notes: stages compose into ONE Catalyst plan when staging to
 disk is disabled (`durable_staging=False`) — no spill between stages
 (the reference re-reads files between stages; SURVEY §4 explicitly
 drops that for performance). With durable staging on, each stage
-writes Parquet/JSONL and the next reads it back — the auditability
-layout of the reference, kept as an option.
+writes JSON-lines and the next reads it back — the auditability
+layout of the reference, kept as an option. Each staged directory
+carries a `_schema.json` sidecar (the written frame's schema; Spark's
+file index skips `_`-prefixed names), so the next stage — straight
+through or resumed by `advance()` — reads the file back with its
+writer's types and column order and runs no schema-inference job.
+A file without a sidecar (uploads, raw inputs, files staged before
+sidecars existed) is read with inference.
 """
 
 from __future__ import annotations
 
 import concurrent.futures
+import json
 import os
 from datetime import datetime, timezone
 from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import EngineConfig
 from ..sinks.writers import dated_path, write_jsonl, write_parquet
@@ -314,11 +322,12 @@ class Pipeline(metaclass=PipelineMeta):
     def _stage_input(self, prev_stage: str, meta: dict) -> DataFrame:
         """Input DataFrame for a stage: the in-flight frame when staging
         is composed (single Catalyst plan), else re-read the staged file
-        (the reference's spill-per-stage, kept for auditability)."""
+        (the reference's spill-per-stage, kept for auditability) with
+        the schema its writer recorded, if any."""
         df = meta.pop("_df", None)
         if df is not None:
             return df
-        return read_staged(self.spark, meta["file"])
+        return read_staged(self.spark, meta["file"], schema=_staged_schema(meta["file"]))
 
     def _commit_stage(self, stage: str, df: DataFrame, meta: dict) -> dict:
         """Write + metadata upsert + on-commit hooks (pipeline.py:825-851
@@ -349,6 +358,7 @@ class Pipeline(metaclass=PipelineMeta):
                 created,
             )
             write_jsonl(df, path, compression=self.config.data_compression)
+            _write_staged_schema(path, df.schema)
             out["file"] = path
         else:
             out["_df"] = df
@@ -435,6 +445,28 @@ class Pipeline(metaclass=PipelineMeta):
             self.advance(obj["pkey"], ignore_pipeline_version=True)
             count += 1
         return count
+
+
+SCHEMA_SIDECAR = "_schema.json"
+
+
+def _write_staged_schema(path: str, schema: StructType) -> None:
+    """Record the schema of the frame staged at `path` (temp + rename:
+    a reader never sees a partial sidecar)."""
+    tmp = os.path.join(path, SCHEMA_SIDECAR + ".tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(schema.json())
+    os.replace(tmp, os.path.join(path, SCHEMA_SIDECAR))
+
+
+def _staged_schema(path: str) -> Optional[StructType]:
+    """The schema recorded when the pipeline staged `path`, or None
+    (infer) for a file it did not stage."""
+    try:
+        with open(os.path.join(path, SCHEMA_SIDECAR), encoding="utf-8") as fh:
+            return StructType.fromJson(json.load(fh))
+    except (FileNotFoundError, NotADirectoryError):
+        return None
 
 
 def _safe_call(fn: Callable, *args: Any) -> None:

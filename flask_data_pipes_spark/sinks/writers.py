@@ -11,8 +11,8 @@ upsert happens only after the write returns (exactly-once commit
 ordering preserved).
 
 Serialization parity (pipeline.py:75, ext/serializers.py:7-16):
-timestamps ISO-8601 with Z suffix, non-ASCII preserved (Spark writes
-UTF-8 unescaped), gzip optional.
+timestamps ISO-8601 with their UTC offset (`Z` under a UTC session),
+non-ASCII preserved (Spark writes UTF-8 unescaped), gzip optional.
 """
 
 from __future__ import annotations
@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
+    "STAGED_TIMESTAMP_FORMAT",
     "dated_path",
     "write_jsonl",
     "write_parquet",
@@ -36,6 +37,13 @@ __all__ = [
     "write_sorted_parquet",
     "compact_parquet",
 ]
+
+
+# Staged JSON-lines timestamp pattern, shared by `write_jsonl` and
+# `sources.files.read_jsonl`. `XXX` writes the session's real offset
+# (`Z` under UTC, `-04:00` under America/New_York); a literal `'Z'`
+# would label local wall time as UTC.
+STAGED_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
 
 def dated_path(
@@ -72,9 +80,7 @@ def write_jsonl(
     writer = df.write.mode(mode)
     if compression:
         writer = writer.option("compression", compression)
-    writer.option(
-        "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
-    ).json(path)
+    writer.option("timestampFormat", STAGED_TIMESTAMP_FORMAT).json(path)
     return path
 
 

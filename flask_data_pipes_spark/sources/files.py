@@ -12,9 +12,12 @@ downstream code filters the returned DataFrame.
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ..sinks.writers import STAGED_TIMESTAMP_FORMAT
 
 __all__ = [
     "read_staged",
@@ -29,12 +32,15 @@ __all__ = [
 
 
 def read_jsonl(
-    spark: SparkSession, path: str, schema: Optional[str] = None
+    spark: SparkSession, path: str, schema: Union[str, StructType, None] = None
 ) -> DataFrame:
     """JSON-lines (optionally .gz — Spark decompresses by extension).
-    Pass a DDL `schema` whenever known: skipping inference avoids an
-    extra full scan, which matters at 100 TB."""
-    reader = spark.read
+    Pass a `schema` (DDL string or StructType) whenever known: skipping
+    inference avoids an extra full scan, which matters at 100 TB.
+    Timestamps parse with the pattern `write_jsonl` stages them in
+    (`STAGED_TIMESTAMP_FORMAT`); schema inference leaves them strings
+    either way."""
+    reader = spark.read.option("timestampFormat", STAGED_TIMESTAMP_FORMAT)
     if schema:
         reader = reader.schema(schema)
     return reader.json(path)
@@ -217,7 +223,9 @@ _FORMATS = {
 }
 
 
-def read_staged(spark: SparkSession, path: str, schema: Optional[str] = None) -> DataFrame:
+def read_staged(
+    spark: SparkSession, path: str, schema: Union[str, StructType, None] = None
+) -> DataFrame:
     """Extension-dispatching reader (pipeline.py:721-743 analog).
     `.gz` is stripped first (gzip handled by Spark transparently)."""
     name = path[:-3] if path.endswith(".gz") else path

@@ -330,6 +330,129 @@ def test_async_hooks_and_record_toggle(spark, tmp_path):
     assert not obj["loaded"]  # record=False skips the loaded mark
 
 
+# --- staged schema sidecar -------------------------------------------------
+
+
+_TYPED_SQL = """
+SELECT * FROM VALUES
+  (1, 1.5D, 12.34BD, true, date'2024-01-02', timestamp'2024-07-01 10:11:12.123456',
+   INTERVAL '1 02:03:04.5' DAY TO SECOND, array(1, 2), map('a', 'b'),
+   named_struct('k', 1, 's', 'x'), 'www.Example.com', X'0A0B', CAST(NULL AS STRING)),
+  (2, double('NaN'), -0.01BD, false, date'1999-12-31', timestamp'1970-01-01 00:00:00',
+   INTERVAL '-0 00:00:01' DAY TO SECOND, array(), map(),
+   named_struct('k', 2, 's', NULL), 'api.host.org', X'', CAST(NULL AS STRING)),
+  (3, double('-Infinity'), NULL, NULL, NULL, NULL,
+   NULL, NULL, NULL, NULL, NULL, NULL, CAST(NULL AS STRING))
+  AS t(n, x, amount, flag, day, at, span, items, attrs, inner, host, blob, gone)
+"""
+
+
+def _typed_pipeline(tag, source, data_dir):
+    """extract (the typed frame) → transform (a model with one field of
+    every type) → load, on fresh class names so neither registry
+    returns an earlier test's class."""
+
+    def pull(self, spark, meta):
+        return source
+
+    model = type(f"Typed{tag}", (Model,), {
+        "__module__": __name__,
+        "n": fields.Integer(),
+        "x": fields.Float(),
+        "amount": fields.Decimal(),
+        "flag": fields.Boolean(),
+        "day": fields.Date(),
+        "day_at": fields.DateTime(attribute="at"),
+        "at": fields.Raw(),
+        "span": fields.TimeDelta(),
+        "items": fields.List(fields.Integer()),
+        "attrs": fields.Dict(),
+        "inner": fields.Nested(User),
+        "host": fields.HostName(),
+        "blob": fields.Raw(),
+        "gone": fields.String(),
+    })
+    pipe_cls = type(f"TypedPipeline{tag}", (Pipeline,), {
+        "__module__": __name__, "extract": True, "transform": True, "load": True,
+        "pull": decorators.extract(pull),
+    })
+    cfg = EngineConfig(data_dir=data_dir)
+    pipe = pipe_cls(model=model, spark=source.sparkSession, config=cfg)
+    pipe.register_model(model)
+    meta = [dict(pkey=None, model=model.__qname__, file=None, created="2026-08-13")]
+    load_dir = os.path.join(data_dir, "load", model.filename())
+    return pipe, model, meta, load_dir
+
+
+def _canon(df):
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=repr)
+        for r in df.collect()
+    )
+
+
+def test_staged_schema_round_trip_every_field_type(spark, tmp_path):
+    """Staged stages read back with their writer's schema: the loaded
+    Parquet has exactly `Model.transform`'s schema (types, column order,
+    the all-null column) and rows. Schema inference would sort columns,
+    drop `gone`, and turn int/decimal/timestamp/interval/binary/map
+    into bigint/double/string/string/string/struct."""
+    source = spark.sql(_TYPED_SQL)
+    pipe, model, meta, load_dir = _typed_pipeline("RoundTrip", source, str(tmp_path / "d"))
+    pipe(stage="extract", meta=meta)
+    expected = model.transform(source)
+    loaded = spark.read.parquet(load_dir)
+    assert loaded.schema.simpleString() == expected.schema.simpleString()
+    assert _canon(loaded) == _canon(expected)
+
+
+def test_staged_pipeline_runs_four_jobs_per_object(spark, tmp_path):
+    """extract + transform + load of one raw JSON-lines object: one
+    inference read of the raw file and three writes. The transform and
+    load inputs are read with their sidecar schema, so no inference job."""
+    raw = tmp_path / "jobs.jsonl"
+    raw.write_text(json.dumps({"first": "ada", "last": "lovelace", "birthday": None}))
+
+    class JobsPipeline(Pipeline):
+        extract = True
+        transform = True
+        load = True
+
+    class JobsUser(User):
+        pass
+
+    pipe = JobsPipeline(model=JobsUser, spark=spark,
+                        config=EngineConfig(data_dir=str(tmp_path / "data")))
+    pipe.register_model(JobsUser)
+    sc = spark.sparkContext
+    sc.setJobGroup("staged-pipeline-jobs", "one object, extract to load")
+    try:
+        pipe(stage="extract", meta=[dict(pkey=None, model=JobsUser.__qname__,
+                                         file=str(raw), created="2026-08-13")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup("staged-pipeline-jobs")) == 4
+
+
+def test_advance_reads_staged_schema(spark, tmp_path):
+    """An object stopped after transform and resumed by advance() loads
+    the same schema and rows as a straight-through run."""
+    source = spark.sql(_TYPED_SQL)
+    straight = _typed_pipeline("Straight", source, str(tmp_path / "a"))
+    straight[0](stage="extract", meta=straight[2])
+    pipe, model, meta, load_dir = _typed_pipeline("Resumed", source, str(tmp_path / "b"))
+    pipe._transform_executor(pipe._extract_executor(meta))
+    pkey = pipe.store.objects[-1]["pkey"]
+    assert pipe.store.next(pkey)[0] == "load"
+    pipe.advance(pkey)
+    want, got = spark.read.parquet(straight[3]), spark.read.parquet(load_dir)
+    assert got.schema.simpleString() == want.schema.simpleString()
+    assert got.schema.simpleString() == model.transform(source).schema.simpleString()
+    assert _canon(got) == _canon(want)
+    assert pipe.store.get_object(pkey)["pipeline_completed"]
+
+
 # --- exception taxonomy (reference exceptions.py:1-49) ---------------------
 
 

@@ -289,6 +289,19 @@ def test_driver_contract_integrity():
     assert all(isinstance(n, str) and n for n in qs)
 
 
+def test_checked_prefix_frozen():
+    """The 50 gate-checked names, in order, are frozen as of round 16
+    (sha256 over the newline-joined list). A re-curation shows up as
+    dropped queries in the verdict even when every entry stays oracled,
+    so changing the prefix must be a deliberate edit of this digest."""
+    import hashlib
+
+    from flask_data_pipes_spark.plans.catalog import CHECKED_PREFIX
+
+    digest = hashlib.sha256("\n".join(CHECKED_PREFIX).encode()).hexdigest()
+    assert digest == "85bef16aee1a6a7e54989a04182eeb94d7d81d8c21017a2059f030a9c8531e4f"
+
+
 def test_checked_prefix_curated():
     """The driver's gate checks the first 50 queries() names in
     enumeration order. Assert the curated prefix: exactly 50 unique

@@ -1,6 +1,6 @@
 """Source/sink tests: staged readers (extension dispatch, gzip, CSV
-string typing), JSONL writer serialization parity (ISO-Z timestamps,
-non-ASCII), dated path layout, upload ingest validation (extension /
+string typing), JSONL writer serialization parity (ISO-8601 timestamps
+with offset, non-ASCII), dated path layout, upload ingest validation (extension /
 role / active / hash-prefix), and the HTTP connector's driver-side
 pieces (URL joining, auth injection, pagination staging, mapInPandas
 fan-out) — all without network access.
@@ -45,6 +45,42 @@ def test_write_jsonl_timestamp_iso_z(spark, tmp_path):
     rec = json.loads(open(part).read().splitlines()[0])
     # reference serializer: isoformat + 'Z' (ext/serializers.py:7-16)
     assert rec["ts"] == "2024-02-29T12:34:56.789000Z"
+
+
+def test_write_jsonl_utc_bytes_match_literal_z_pattern(spark, tmp_path):
+    """Under a UTC session the offset pattern writes exactly the bytes
+    the earlier literal-'Z' pattern wrote."""
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    df = spark.sql(
+        "SELECT timestamp'2024-02-29 12:34:56.789' AS ts,"
+        " timestamp'1969-12-31 23:59:59.999999' AS early, 1 AS k"
+    ).coalesce(1)
+    new, old = str(tmp_path / "new.jsonl"), str(tmp_path / "old.jsonl")
+    writers.write_jsonl(df, new, compression=None)
+    df.write.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'").json(old)
+    [a] = glob.glob(os.path.join(new, "part-*.json"))
+    [b] = glob.glob(os.path.join(old, "part-*.json"))
+    assert open(a, "rb").read() == open(b, "rb").read()
+
+
+def test_staged_timestamps_round_trip_non_utc(spark, tmp_path):
+    """A non-UTC session stages the real offset, not local wall time
+    labelled 'Z', and read_staged with the schema returns the same
+    instant."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.sql("SELECT timestamp'2024-07-01 10:11:12.123456Z' AS ts")
+        path = str(tmp_path / "ny.jsonl")
+        writers.write_jsonl(df, path, compression=None)
+        [part] = glob.glob(os.path.join(path, "part-*.json"))
+        rec = json.loads(open(part).read().splitlines()[0])
+        assert rec["ts"] == "2024-07-01T06:11:12.123456-04:00"
+        back = files.read_staged(spark, path, schema=df.schema)
+        micros = "unix_micros(ts) AS us"
+        assert back.selectExpr(micros).collect() == df.selectExpr(micros).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
 
 
 def test_read_csv_defaults_to_strings(spark, tmp_path):
