@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from typing import Optional
 
 from ..functions import text as T
+from ..sinks import atrest
 from .dedup import spread_for_cpu
 
 __all__ = [
@@ -1479,25 +1480,23 @@ def write_training_shards(
     aggregation; the manifest is n_shards rows per generation.
     mode("error") refuses to clobber an existing export — committed
     generations are immutable artifacts."""
-    import json
-
     _check_packed_cols(packed, "write_training_shards")
     if int(n_shards) < 1:
         raise ValueError("n_shards must be >= 1")
     spark = packed.sparkSession
     _shard_write_gen(packed, path, 0, int(n_shards), seed, first=True)
-    meta = json.dumps({"n_shards": int(n_shards), "seed": int(seed)})
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "error"
-    ).text(path + "/meta")
+    atrest.write_meta(
+        spark,
+        path + "/meta",
+        {"n_shards": int(n_shards), "seed": int(seed)},
+        mode="error",
+    )
     return spark.read.parquet(path + "/manifest").where(F.col("gen") == 0)
 
 
 def training_shard_params(spark, path: str) -> dict:
     """Read back an export's routing parameters (JSON sidecar)."""
-    import json
-
-    return json.loads(spark.read.text(path + "/meta").collect()[0][0])
+    return atrest.read_meta(spark, path + "/meta")
 
 
 def _check_packed_cols(packed: DataFrame, who: str) -> None:
@@ -1507,14 +1506,6 @@ def _check_packed_cols(packed: DataFrame, who: str) -> None:
                 f"{who}: missing column {c!r} — input must be "
                 "pack_sequence_ids output"
             )
-
-
-def _hadoop_rm(spark, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API (no-op when
-    absent) — works for local paths and shared URIs alike."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
 
 
 def _shard_write_gen(
@@ -1545,24 +1536,22 @@ def _shard_write_gen(
     the orphan (ok=false), and re-running the append converges."""
     spark = packed.sparkSession
     if not first:
-        _hadoop_rm(spark, f"{path}/data/gen={int(gen)}")
-        _hadoop_rm(spark, f"{path}/manifest/gen={int(gen)}")
+        atrest.drop_partitions(
+            spark, [f"{path}/data", f"{path}/manifest"], "gen", [int(gen)]
+        )
     key = F.concat_ws(
         ":", F.col("grp").cast("string"), F.col("seq_idx").cast("string")
     )
     data = packed.withColumn(
         "shard", (T.md5_long(key, seed) % int(n_shards)).cast("int")
     ).withColumn("gen", F.lit(int(gen)).cast("int"))
-    w = data.repartition(int(n_shards), F.col("shard")).write
+    data = data.repartition(int(n_shards), F.col("shard"))
     if first:
-        w.mode("error").partitionBy("gen", "shard").parquet(path + "/data")
-    else:
-        (
-            w.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen", "shard")
-            .parquet(path + "/data")
+        data.write.mode("error").partitionBy("gen", "shard").parquet(
+            path + "/data"
         )
+    else:
+        atrest.write_partitions(data, path + "/data", "gen", "shard")
     manifest = (
         spark.read.parquet(path + "/data")
         .where(F.col("gen") == int(gen))
@@ -1575,16 +1564,13 @@ def _shard_write_gen(
             F.bit_xor(_shard_row_sig(seed + 1)).alias("checksum"),
         )
     )
-    mw = manifest.coalesce(1).write
+    manifest = manifest.coalesce(1)
     if first:
-        mw.mode("error").partitionBy("gen").parquet(path + "/manifest")
-    else:
-        (
-            mw.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("gen")
-            .parquet(path + "/manifest")
+        manifest.write.mode("error").partitionBy("gen").parquet(
+            path + "/manifest"
         )
+    else:
+        atrest.write_partitions(manifest, path + "/manifest", "gen")
 
 
 def append_training_shards(
@@ -1697,9 +1683,7 @@ def _compact_intent(spark, path: str) -> Optional[dict]:
     committed marker (or None) instead of raising."""
     import json
 
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path + "/compact_meta")
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
+    if not atrest.exists(spark, path + "/compact_meta"):
         return None
     best = None
     for row in spark.read.text(path + "/compact_meta").collect():
@@ -1782,13 +1766,7 @@ def compact_training_shards(
     )
     # generations from the DATA directory (the manifest may be a step
     # behind inside a crashed compaction's window)
-    existing = [
-        int(r["gen"])
-        for r in spark.read.parquet(path + "/data")
-        .select("gen")
-        .distinct()
-        .collect()
-    ]
+    existing = atrest.partition_ids(spark, path + "/data", "gen")
     if int(generation) in existing and not in_flight:
         raise ValueError(
             f"compact_training_shards: generation {generation} already "
@@ -1834,11 +1812,7 @@ def compact_training_shards(
             "generation ids are the replay contract's clock"
         )
     if in_flight and int(generation) in existing:
-        mpath = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{path}/manifest/gen={int(generation)}"
-        )
-        mfs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if mfs.exists(mpath):
+        if atrest.exists(spark, f"{path}/manifest/gen={int(generation)}"):
             # The consolidated generation is FULLY committed (data and
             # manifest both on disk) — this retry is recovering a crash
             # that happened MID-DELETE. Re-running the fold here would
@@ -1849,9 +1823,9 @@ def compact_training_shards(
             # window where "re-read the old generations" is wrong).
             # The consolidated data is complete by construction; the
             # only unfinished work is the deletes.
-            for g in old:
-                _hadoop_rm(spark, f"{path}/data/gen={g}")
-                _hadoop_rm(spark, f"{path}/manifest/gen={g}")
+            atrest.drop_partitions(
+                spark, [f"{path}/data", f"{path}/manifest"], "gen", old
+            )
             return spark.read.parquet(path + "/manifest").where(
                 F.col("gen") == int(generation)
             )
@@ -1864,15 +1838,11 @@ def compact_training_shards(
     # reopened the duplicate-replay door. A same-id retry overwrites
     # its OWN marker file only; prior compactions' markers are never
     # touched, and `_compact_intent` reads the max.
-    mpath = spark._jvm.org.apache.hadoop.fs.Path(
-        f"{path}/compact_meta/marker-{int(generation):020d}.json"
+    atrest.write_bytes(
+        spark,
+        f"{path}/compact_meta/marker-{int(generation):020d}.json",
+        meta.encode("utf-8"),
     )
-    fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(mpath, True)
-    try:
-        out.write(bytearray(meta.encode("utf-8")))
-    finally:
-        out.close()
     src = (
         spark.read.parquet(path + "/data")
         .where(F.col("gen") != int(generation))
@@ -1883,9 +1853,9 @@ def compact_training_shards(
         src, path, int(generation), params["n_shards"], params["seed"],
         first=False,
     )
-    for g in old:
-        _hadoop_rm(spark, f"{path}/data/gen={g}")
-        _hadoop_rm(spark, f"{path}/manifest/gen={g}")
+    atrest.drop_partitions(
+        spark, [f"{path}/data", f"{path}/manifest"], "gen", old
+    )
     return spark.read.parquet(path + "/manifest").where(
         F.col("gen") == int(generation)
     )
@@ -2432,27 +2402,22 @@ def kn_model_save(spark, model: KNModel, path: str) -> None:
     model is FORCED onto the training discount/rounding). Doubles
     round-trip bit-exactly through parquet, so a loaded model scores
     byte-identically to the in-memory one (round-trip-tested)."""
-    import json
-
     for name in ("tri", "ctx12", "big", "ctx2", "uni", "tot"):
         getattr(model, name).write.mode("overwrite").parquet(
             f"{path}/{name}"
         )
-    meta = json.dumps(
-        {"discount": model.discount, "round_term": model.round_term}
+    atrest.write_meta(
+        spark,
+        f"{path}/meta",
+        {"discount": model.discount, "round_term": model.round_term},
     )
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(f"{path}/meta")
 
 
 def kn_model_load(spark, path: str) -> KNModel:
     """Reload a `kn_model_save`d model (lazy parquet scans — nothing
     is collected; the model tables behave exactly like the in-memory
     builder's)."""
-    import json
-
-    meta = json.loads(spark.read.text(f"{path}/meta").collect()[0][0])
+    meta = atrest.read_meta(spark, f"{path}/meta")
     frames = {
         name: spark.read.parquet(f"{path}/{name}")
         for name in ("tri", "ctx12", "big", "ctx2", "uni", "tot")
@@ -2630,23 +2595,18 @@ def jm_bigram_model(
 def jm_bigram_model_save(spark, model: JMBigramModel, path: str) -> None:
     """Persist a JMBigramModel (parquet tables + JSON param sidecar;
     same discipline as `kn_model_save`)."""
-    import json
-
     for name in ("big", "uni", "tot"):
         getattr(model, name).write.mode("overwrite").parquet(
             f"{path}/{name}"
         )
-    meta = json.dumps({"lam": model.lam, "round_term": model.round_term})
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(f"{path}/meta")
+    atrest.write_meta(
+        spark, f"{path}/meta", {"lam": model.lam, "round_term": model.round_term}
+    )
 
 
 def jm_bigram_model_load(spark, path: str) -> JMBigramModel:
     """Reload a `jm_bigram_model_save`d model (lazy parquet scans)."""
-    import json
-
-    meta = json.loads(spark.read.text(f"{path}/meta").collect()[0][0])
+    meta = atrest.read_meta(spark, f"{path}/meta")
     return JMBigramModel(
         big=spark.read.parquet(f"{path}/big"),
         uni=spark.read.parquet(f"{path}/uni"),

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..sinks import atrest
 
 __all__ = [
     "exact_dedup",
@@ -1536,8 +1537,8 @@ def fuzzy_pairs(
 # index stays duplicate-free and each batch costs O(batch) band work
 # plus one band_key join against the at-rest index.
 #
-# Replay idempotence follows the streaming-sink discipline
-# (streaming/stream.py): the band table is partitioned by batch_id and
+# Replay idempotence follows the replay-safe write protocol
+# (sinks/atrest.py): the band table is partitioned by batch_id and
 # written with dynamic partition overwrite, so re-running a failed
 # batch overwrites its own partition instead of double-inserting; the
 # match read EXCLUDES the current batch_id (partition-pruned), so a
@@ -1581,9 +1582,6 @@ def lsh_index_build(
     For a fixed heavy-reuse index, `sinks.writers.write_bucketed` on
     band_key is the exchange-free upgrade; plain parquet keeps this
     portable (same trade as similarity.py::ivf_save)."""
-    import json
-    import os
-
     spark = df.sparkSession
     params = {
         "n_hashes": 8,
@@ -1598,21 +1596,16 @@ def lsh_index_build(
     bands.write.mode("overwrite").partitionBy("batch_id").parquet(
         _lsh_index_bands_path(path)
     )
-    meta = json.dumps({"id_col": id_col, **params})
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(_lsh_index_meta_path(path))
+    atrest.write_meta(
+        spark, _lsh_index_meta_path(path), {"id_col": id_col, **params}
+    )
     n = spark.read.parquet(_lsh_index_bands_path(path)).count()
     return n
 
 
 def lsh_index_params(spark, path: str) -> dict:
     """Read back the index's banding parameters (JSON sidecar)."""
-    import json
-
-    return json.loads(
-        spark.read.text(_lsh_index_meta_path(path)).first()["value"]
-    )
+    return atrest.read_meta(spark, _lsh_index_meta_path(path))
 
 
 def lsh_index_match(
@@ -1742,14 +1735,10 @@ def lsh_index_dedup_append(
         # end (VERDICT r12 #3); plan-asserted in tests/test_lsh_index.
         dropped = hits.unionByName(sib).distinct().localCheckpoint()
         survivors = batch.join(dropped, on=id_col, how="left_anti")
-        out_bands = bb.join(dropped, on=id_col, how="left_anti").withColumn(
-            "batch_id", F.lit(int(batch_id)).cast("long")
-        )
-        (
-            out_bands.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(_lsh_index_bands_path(path))
+        atrest.write_batch(
+            bb.join(dropped, on=id_col, how="left_anti"),
+            _lsh_index_bands_path(path),
+            batch_id,
         )
         return survivors
     finally:
@@ -1798,17 +1787,11 @@ def lsh_index_compact(
     compaction) into `n_files` files."""
     bands_path = _lsh_index_bands_path(path)
     lsh_index_params(spark, path)  # sanity: must be a real index
-    existing = [
-        int(r["batch_id"])
-        for r in spark.read.parquet(bands_path)
-        .select("batch_id")
-        .distinct()
-        .collect()
-    ]
+    existing = atrest.partition_ids(spark, bands_path, "batch_id")
     if len(existing) < 2:
         raise ValueError(
             "lsh_index_compact: nothing to compact "
-            f"(batch ids on disk: {sorted(existing)})"
+            f"(batch ids on disk: {existing})"
         )
     if int(batch_id) <= max(existing):
         raise ValueError(
@@ -1817,7 +1800,6 @@ def lsh_index_compact(
             "stream's monotonic clock, and reusing a live one would "
             "overwrite real band data"
         )
-    old = existing
     src = (
         spark.read.parquet(bands_path)
         .drop("batch_id")
@@ -1828,18 +1810,8 @@ def lsh_index_compact(
         .distinct()
         .localCheckpoint()  # cut lineage from the files we rewrite
     )
-    (
-        src.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition(max(1, int(n_files)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(bands_path)
+    atrest.write_batch(
+        src.repartition(max(1, int(n_files))), bands_path, batch_id
     )
-    for b in old:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{bands_path}/batch_id={b}"
-        )
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+    atrest.drop_partitions(spark, [bands_path], "batch_id", existing)
     return spark.read.parquet(bands_path).count()

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import vectors as V
+from ..sinks import atrest
 
 __all__ = [
     "cosine_topk",
@@ -433,7 +434,6 @@ def ivf_save(index: IvfIndex, path: str) -> None:
     JSON sidecar. The at-scale complement to `IvfIndex.persist()`:
     fit once, serve query batches from cold storage across sessions
     without re-paying the KMeans or the assignment pass."""
-    import json as _json
     import os as _os
 
     (
@@ -442,15 +442,11 @@ def ivf_save(index: IvfIndex, path: str) -> None:
         .parquet(_os.path.join(path, "assigned"))
     )
     spark = index.assigned.sparkSession
-    meta = _json.dumps(
-        {"id_col": index.id_col, "centers": index.centers}
+    atrest.write_meta(
+        spark,
+        _os.path.join(path, "meta"),
+        {"id_col": index.id_col, "centers": index.centers},
     )
-    # the sidecar rides through the same FS the parquet went to,
-    # written as a 1-row text file (works on any Hadoop-compatible FS,
-    # no driver-local path assumption)
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(_os.path.join(path, "meta"))
 
 
 def ivf_load(spark, path: str) -> IvfIndex:
@@ -458,12 +454,9 @@ def ivf_load(spark, path: str) -> IvfIndex:
     partition-pruned on `__cell`: `ivf_search` filters/joins on the
     partition column, so Spark lists and reads only the probed cells'
     directories (plan-asserted in tests)."""
-    import json as _json
     import os as _os
 
-    meta = _json.loads(
-        spark.read.text(_os.path.join(path, "meta")).first()["value"]
-    )
+    meta = atrest.read_meta(spark, _os.path.join(path, "meta"))
     assigned = spark.read.parquet(_os.path.join(path, "assigned")).select(
         meta["id_col"],
         "__v",
@@ -1510,25 +1503,22 @@ def pq_save(index: PqIndex, path: str) -> None:
     `ivf_save`). The at-rest footprint IS the memory story: m bytes +
     id per vector; codebooks are a few hundred KB regardless of corpus
     size. Fit once, serve query batches across sessions."""
-    import json as _json
     import os as _os
 
     index.codes.write.mode("overwrite").parquet(_os.path.join(path, "codes"))
     spark = index.codes.sparkSession
-    meta = _json.dumps({"id_col": index.id_col, "codebooks": index.codebooks})
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(_os.path.join(path, "meta"))
+    atrest.write_meta(
+        spark,
+        _os.path.join(path, "meta"),
+        {"id_col": index.id_col, "codebooks": index.codebooks},
+    )
 
 
 def pq_load(spark, path: str) -> PqIndex:
     """Reload a `pq_save`d index."""
-    import json as _json
     import os as _os
 
-    meta = _json.loads(
-        spark.read.text(_os.path.join(path, "meta")).first()["value"]
-    )
+    meta = atrest.read_meta(spark, _os.path.join(path, "meta"))
     codes = spark.read.parquet(_os.path.join(path, "codes")).select(
         meta["id_col"], "__code"
     )
@@ -1541,7 +1531,6 @@ def ivfpq_save(index: IvfPqIndex, path: str) -> None:
     directories (the same at-rest pruning as `ivf_save`, now over
     m-byte payloads instead of raw vectors) — plus centers+codebooks
     as one JSON sidecar."""
-    import json as _json
     import os as _os
 
     (
@@ -1550,27 +1539,23 @@ def ivfpq_save(index: IvfPqIndex, path: str) -> None:
         .parquet(_os.path.join(path, "codes"))
     )
     spark = index.codes.sparkSession
-    meta = _json.dumps(
+    atrest.write_meta(
+        spark,
+        _os.path.join(path, "meta"),
         {
             "id_col": index.id_col,
             "centers": index.centers,
             "codebooks": index.codebooks,
-        }
+        },
     )
-    spark.createDataFrame([(meta,)], "meta string").coalesce(1).write.mode(
-        "overwrite"
-    ).text(_os.path.join(path, "meta"))
 
 
 def ivfpq_load(spark, path: str) -> IvfPqIndex:
     """Reload an `ivfpq_save`d index; the code table comes back
     partition-pruned on `__cell`."""
-    import json as _json
     import os as _os
 
-    meta = _json.loads(
-        spark.read.text(_os.path.join(path, "meta")).first()["value"]
-    )
+    meta = atrest.read_meta(spark, _os.path.join(path, "meta"))
     codes = spark.read.parquet(_os.path.join(path, "codes")).select(
         meta["id_col"],
         F.col("__cell").cast("int").alias("__cell"),

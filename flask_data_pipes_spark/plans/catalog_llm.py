@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as T
 from ..functions import vectors as V
+from ..sinks import atrest
 from .catalog import load, register
 
 def _scratch_dir(spark: SparkSession, prefix: str) -> str:
@@ -58,9 +59,7 @@ def _scratch_rm(spark: SparkSession, path: str) -> None:
     the Hadoop FileSystem API (works for local paths AND shared URIs;
     the streaming sinks' discipline)."""
     try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+        atrest.rm(spark, path)
     except Exception:  # noqa: BLE001 — cleanup must never fail the entry
         import shutil
 
@@ -7284,19 +7283,6 @@ def llm_kn_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (round 14, VERDICT r13 "What's missing" #1-2)
 
 
-def _write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
-    """Write fixture bytes through the Hadoop FileSystem API (works for
-    local paths AND shared scratch URIs — the `_scratch_dir`
-    discipline)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(data))
-    finally:
-        out.close()
-
-
 @register("llm_warc_read")  # materializing source fixture → rows-only + golden pin
 def llm_warc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC/WET source ingest, certified end-to-end (sources/warc.py —
@@ -7354,8 +7340,8 @@ def llm_warc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = _scratch_dir(spark, "llm_warc_read_")
     try:
-        _write_bytes(spark, f"{tmp}/part-a.warc", plain)
-        _write_bytes(spark, f"{tmp}/part-b.warc.gz", gz)
+        atrest.write_bytes(spark, f"{tmp}/part-a.warc", plain)
+        atrest.write_bytes(spark, f"{tmp}/part-b.warc.gz", gz)
         base = F.element_at(F.split(F.col("src"), "/"), -1)
         rep = warc_report(spark, tmp).select(
             base.alias("file"), "n_records", "n_skipped"
@@ -7562,7 +7548,7 @@ def llm_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = _scratch_dir(spark, "llm_wet_roundtrip_")
     try:
-        _write_bytes(spark, f"{tmp}/fixture.warc.gz", archive)
+        atrest.write_bytes(spark, f"{tmp}/fixture.warc.gz", archive)
         wet = wet_documents(warc_records(spark, tmp), id_col="rid")
         parsed = wet.select(
             F.regexp_extract("rid", r"doc-(\d+)", 1).cast("long").alias(
@@ -7713,7 +7699,7 @@ def llm_warc_charset(spark: SparkSession, sf_dir: str) -> DataFrame:
     archive = build_warc_bytes([rec(r) for r in fixture], member_gzip=True)
     tmp = _scratch_dir(spark, "llm_warc_charset_")
     try:
-        _write_bytes(spark, f"{tmp}/fixture.warc.gz", archive)
+        atrest.write_bytes(spark, f"{tmp}/fixture.warc.gz", archive)
         pages = warc_html_documents(
             warc_records(spark, tmp), id_col="rid"
         )

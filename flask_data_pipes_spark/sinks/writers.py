@@ -39,11 +39,14 @@ __all__ = [
 ]
 
 
-# Staged JSON-lines timestamp pattern, shared by `write_jsonl` and
-# `sources.files.read_jsonl`. `XXX` writes the session's real offset
-# (`Z` under UTC, `-04:00` under America/New_York); a literal `'Z'`
-# would label local wall time as UTC.
-STAGED_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+# Staged JSON-lines timestamp pattern of `write_jsonl`. `XXXXX` writes
+# the session's real offset to the second (`Z` under UTC, `-04:00`
+# under America/New_York, `-04:56:02` for New York local mean time
+# before 1883); `XXX` would drop offset seconds and shift such values,
+# and a literal `'Z'` would label local wall time as UTC. Spark's
+# default JSON timestamp parser reads every value this pattern writes,
+# so readers need no matching option.
+STAGED_TIMESTAMP_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXXXX"
 
 
 def dated_path(

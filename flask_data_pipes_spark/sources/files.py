@@ -17,8 +17,6 @@ from typing import Optional, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..sinks.writers import STAGED_TIMESTAMP_FORMAT
-
 __all__ = [
     "read_staged",
     "read_jsonl",
@@ -37,10 +35,11 @@ def read_jsonl(
     """JSON-lines (optionally .gz — Spark decompresses by extension).
     Pass a `schema` (DDL string or StructType) whenever known: skipping
     inference avoids an extra full scan, which matters at 100 TB.
-    Timestamps parse with the pattern `write_jsonl` stages them in
-    (`STAGED_TIMESTAMP_FORMAT`); schema inference leaves them strings
-    either way."""
-    reader = spark.read.option("timestampFormat", STAGED_TIMESTAMP_FORMAT)
+    Timestamp columns of the schema use Spark's default parser: it
+    reads the offset-qualified values `write_jsonl` stages as well as
+    foreign `2024-02-29 12:34:56` / `2024-02-29T12:34:56` (session
+    time zone); schema inference leaves timestamps strings."""
+    reader = spark.read
     if schema:
         reader = reader.schema(schema)
     return reader.json(path)

@@ -2,21 +2,37 @@
 has NO real streaming — generator pipelining + resumable batch state —
 so this module is the Spark-native superset surface).
 
-Components:
-- `read_jsonl_stream` / `read_events_stream`: file-source streams over
-  the staged landing layout (the streaming twin of the upload→extract
-  spine; Auto-Loader-shaped directory ingestion).
-- `hourly_rollup`: watermarked tumbling-window aggregation — the
-  streaming twin of the batch `q_events_hourly` catalog query (same
-  plan under a watermark; late data beyond the watermark is dropped
-  deterministically).
-- `sessionize_stream`: gap-based sessionization via
-  `applyInPandasWithState` — the custom stateful operator Spark's
-  built-ins can't express (reference has nothing comparable; this is
-  the driver-mandated extension surface).
-- `foreach_batch_stage`: runs a pipeline stage (model transform +
-  staged write + metadata upsert) per micro-batch — exactly-once via
-  the sink's idempotent (batchId-keyed) commit.
+Sources: `read_jsonl_stream` (file-source stream over the staged
+landing layout) and `read_warc_stream` (new archive paths from a crawl
+drop zone).
+
+Stateful streaming operators, each the twin of a batch operator:
+`hourly_rollup` (watermarked tumbling window), `ohlc_stream`,
+`dedup_stream` (dedup within the watermark), `enrich_stream`
+(stream-static join), `interval_join_stream` (stream-stream),
+`sessionize_stream` (`applyInPandasWithState`) and
+`session_window_stream` (native `session_window`), with their batch
+twins `sessionize_batch` and `session_window_agg`.
+
+foreachBatch sinks (`foreach_batch_*`, one callable per sink):
+- `stage` commits a pipeline stage per micro-batch; `upsert` merges
+  changed keys into an external table (idempotent by key);
+- sketch sinks `cms`, `hll`, `bottomk`, `histogram`, `kll`, `mg`, each
+  with a `*_read_merged` query-time merge;
+- `quarantine` splits pass/fail rows (`quarantine_read`);
+- cross-batch dedup: `incremental_dedup` (exact fingerprints against
+  the full history) and `lsh_dedup` (MinHash near-dups against the
+  persistent LSH index);
+- scorers under a saved model: `kn_score`, `lr_score`, and
+  `warc_score` from raw archives;
+- `training_shards` exports packed sequences as shard generations.
+
+Exactly-once: every at-rest sink follows the replay-safe protocol in
+`sinks/atrest.py` — each batch writes its own `batch_id=<N>`
+partition with dynamic partition overwrite, so a replayed batch
+replaces its own partition; sinks that read their own output back
+exclude the current batch id. The compaction hooks (`lsh_dedup`,
+`training_shards`) keep the replay rules of the operators they call.
 
 Scale notes: state stores partition by the grouping key (user_id);
 watermarks bound state size; `availableNow` triggers give the batch-
@@ -31,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..sinks import atrest
+
 __all__ = [
     "read_jsonl_stream",
     "hourly_rollup",
@@ -40,6 +58,7 @@ __all__ = [
     "sessionize_batch",
     "foreach_batch_stage",
     "foreach_batch_upsert",
+    "foreach_batch_incremental_dedup",
     "foreach_batch_cms",
     "cms_read_merged",
     "foreach_batch_hll",
@@ -464,26 +483,29 @@ def foreach_batch_incremental_dedup(
     Per micro-batch: the parquet history collapses to a broadcast bloom
     bitmap, the batch probes it, bloom survivors are exactly verified
     (semi-join that streams the history — the historical fingerprint
-    set never shuffles), and only genuinely-new rows append to the
-    history (and to `out_path` if given), partitioned by batch id.
+    set never shuffles), and only genuinely-new rows land in the
+    history (and in `out_path` if given), partitioned by batch id.
 
-    Exactly-once: a replayed batch re-probes the updated history, finds
-    all its rows already present, and appends nothing — at-least-once
-    foreachBatch upgrades to effectively-once because the dedup
-    predicate itself is the idempotence guard. The output sink is
-    written BEFORE the history: a crash between the two writes means
-    the rows are in `out_path` but not yet in history, so the replay
-    re-emits them (at-least-once into `out_path`, recoverable by a
-    downstream dedup on `fp_col`) instead of silently losing them
-    (the history-first order would make replays emit nothing).
-    (Concurrent writers need a transactional table format; the parquet
-    layout here assumes the single sequential foreachBatch caller
-    Spark guarantees.)
+    Exactly-once on BOTH outputs (`sinks/atrest.py`): the history read
+    EXCLUDES the current batch id (the excluded-self rule of
+    `lsh_index_dedup_append`), so a replayed batch recomputes the same
+    `fresh` fingerprint set against the same pre-batch history, and
+    both writes are `atrest.write_batch` — a replay overwrites its own
+    `batch_id=<N>` partition in each. A crash between the two writes
+    therefore replays to the same state in either order. (Concurrent
+    writers need a transactional table format; the parquet layout here
+    assumes the single sequential foreachBatch caller Spark
+    guarantees.)
+
+    Layout: both outputs are `batch_id=<N>/` partition directories,
+    which replace the earlier flat layout (part files appended per
+    batch, carrying a `batch_id` column); rewrite such a history
+    partitioned by `batch_id` before pointing this sink at it.
 
     Missing-history detection goes through the Hadoop FileSystem API,
     not a blanket except around the read: a transient FS error or a
     corrupt part file must FAIL the micro-batch (so Spark retries)
-    rather than masquerade as "first batch" and append already-seen
+    rather than masquerade as "first batch" and rewrite already-seen
     fingerprints, which would permanently break the one-row-per-
     distinct-fingerprint history invariant.
 
@@ -495,25 +517,21 @@ def foreach_batch_incremental_dedup(
             return
         spark = batch_df.sparkSession
         batch = batch_df.select(id_col, fp_col).dropDuplicates([fp_col])
-        # Existence probe via Hadoop FS — only a genuinely-absent path
-        # means "first batch"; any error from the actual read below
-        # (transient FS fault, corrupt part file) propagates and fails
-        # the micro-batch so Spark retries it.
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(history_path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
-            hist = spark.read.parquet(history_path).select(id_col, fp_col)
+        # only a genuinely-absent path means "first batch"; any error
+        # from the read below fails the micro-batch so Spark retries it
+        if atrest.exists(spark, history_path):
+            hist = (
+                spark.read.parquet(history_path)
+                .where(F.col("batch_id") != int(batch_id))
+                .select(id_col, fp_col)
+            )
             dupes = _dupe_fps(batch, hist, fp_col, id_col, m_bits, k)
             fresh = batch.join(dupes, fp_col, "left_anti")
         else:
             fresh = batch
-        fresh = fresh.withColumn("batch_id", F.lit(batch_id))
-        # out_path first: see the effectively-once note in the
-        # docstring — a crash here replays into at-least-once output,
-        # never silent loss.
         if out_path is not None:
-            fresh.write.mode("append").parquet(out_path)
-        fresh.write.mode("append").parquet(history_path)
+            atrest.write_batch(fresh, out_path, batch_id)
+        atrest.write_batch(fresh, history_path, batch_id)
 
     return sink
 
@@ -613,16 +631,8 @@ def foreach_batch_cms(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sk = cms_build(batch_df, value_col, d=d, w=w, seed=seed).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            sk.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
-        )
+        sk = cms_build(batch_df, value_col, d=d, w=w, seed=seed)
+        atrest.write_batch(sk.coalesce(1), sketch_path, batch_id)
 
     return sink
 
@@ -661,18 +671,8 @@ def foreach_batch_quarantine(
             )
         tagged = batch_df.withColumn(
             failed_col, failed_checks_expr(row_checks)
-        ).withColumns(
-            {
-                "passed": F.size(F.col(failed_col)) == 0,
-                "batch_id": F.lit(batch_id).cast("long"),
-            }
-        )
-        (
-            tagged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "passed")
-            .parquet(out_path)
-        )
+        ).withColumn("passed", F.size(F.col(failed_col)) == 0)
+        atrest.write_batch(tagged, out_path, batch_id, "passed")
 
     return sink
 
@@ -726,16 +726,8 @@ def foreach_batch_hll(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sk = hll_build(batch_df, value_col, b=b, seed=seed).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            sk.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
-        )
+        sk = hll_build(batch_df, value_col, b=b, seed=seed)
+        atrest.write_batch(sk.coalesce(1), sketch_path, batch_id)
 
     return sink
 
@@ -771,16 +763,8 @@ def foreach_batch_bottomk(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        s = bottomk_sample(batch_df, id_col, k=k, seed=seed).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            s.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sample_path)
-        )
+        s = bottomk_sample(batch_df, id_col, k=k, seed=seed)
+        atrest.write_batch(s.coalesce(1), sample_path, batch_id)
 
     return sink
 
@@ -834,16 +818,8 @@ def foreach_batch_histogram(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        h = histogram_counts(batch_df, value_col, lo, hi, bins).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            h.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(hist_path)
-        )
+        h = histogram_counts(batch_df, value_col, lo, hi, bins)
+        atrest.write_batch(h.coalesce(1), hist_path, batch_id)
 
     return sink
 
@@ -883,20 +859,12 @@ def foreach_batch_kll(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sk = kll_build(batch_df, value_col, k=k).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        (
-            # repartition, NOT coalesce: kll_build has no shuffle
-            # boundary, so a narrow coalesce(1) would collapse the
-            # whole batch scan + sketching into one task (ADVICE r10);
-            # the shuffle moves only the ≤ P·k·log n tiny sketch rows
-            sk.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
-        )
+        sk = kll_build(batch_df, value_col, k=k)
+        # repartition, NOT coalesce: kll_build has no shuffle boundary,
+        # so a narrow coalesce(1) would collapse the whole batch scan +
+        # sketching into one task (ADVICE r10); the shuffle moves only
+        # the ≤ P·k·log n tiny sketch rows
+        atrest.write_batch(sk.repartition(1), sketch_path, batch_id)
 
     return sink
 
@@ -931,16 +899,8 @@ def foreach_batch_mg(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sk = mg_build(
-            batch_df, value_col, k=k, build_id=f"b{batch_id}"
-        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        (
-            sk.repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_path)
-        )
+        sk = mg_build(batch_df, value_col, k=k, build_id=f"b{batch_id}")
+        atrest.write_batch(sk.repartition(1), sketch_path, batch_id)
 
     return sink
 
@@ -996,8 +956,8 @@ def foreach_batch_lsh_dedup(
     only its LSH-novel survivors (vs the index AND vs smaller-id batch
     siblings) append their bands and land in `out_path`.
 
-    Exactly-once on BOTH sides, stronger than the bloom sink's
-    at-least-once output: the band table and the output are each
+    Exactly-once on BOTH sides, like the bloom sink: the band table and
+    the output are each
     partitioned by batch_id and written with dynamic partition
     overwrite, and `lsh_index_dedup_append` EXCLUDES the current
     batch_id from its index read — so a replayed batch recomputes the
@@ -1038,11 +998,7 @@ def foreach_batch_lsh_dedup(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/meta"
-        )
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jpath):
+        if atrest.exists(spark, f"{index_path}/meta"):
             survivors = lsh_index_dedup_append(
                 spark, index_path, batch_df, text_col=text_col,
                 batch_id=batch_id,
@@ -1071,15 +1027,7 @@ def foreach_batch_lsh_dedup(
                 batch_id=batch_id, **band_params,
             )
         if out_path is not None:
-            (
-                survivors.withColumn(
-                    "batch_id", F.lit(int(batch_id)).cast("long")
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_path)
-            )
+            atrest.write_batch(survivors, out_path, batch_id)
         if compact_every and (int(batch_id) + 1) % int(compact_every) == 0:
             from ..operators.dedup import (
                 _lsh_index_bands_path,
@@ -1087,13 +1035,7 @@ def foreach_batch_lsh_dedup(
             )
 
             bands_path = _lsh_index_bands_path(index_path)
-            existing = [
-                int(r["batch_id"])
-                for r in spark.read.parquet(bands_path)
-                .select("batch_id")
-                .distinct()
-                .collect()
-            ]
+            existing = atrest.partition_ids(spark, bands_path, "batch_id")
             cid = _LSH_COMPACT_BASE + int(batch_id)
             # replay notes: Structured Streaming retries only the most
             # recent uncommitted batch, so when this hook runs, every
@@ -1109,16 +1051,10 @@ def foreach_batch_lsh_dedup(
                 # partition (dynamic overwrite commits atomically);
                 # the only unfinished work is the deletes — rows of
                 # every other partition already live inside cid
-                for b in existing:
-                    if b == cid:
-                        continue
-                    jp = spark._jvm.org.apache.hadoop.fs.Path(
-                        f"{bands_path}/batch_id={b}"
-                    )
-                    pfs = jp.getFileSystem(
-                        spark._jsc.hadoopConfiguration()
-                    )
-                    pfs.delete(jp, True)
+                atrest.drop_partitions(
+                    spark, [bands_path], "batch_id",
+                    [b for b in existing if b != cid],
+                )
             elif len(existing) >= 2 and cid > max(existing):
                 lsh_index_compact(
                     spark, index_path, cid, n_files=compact_files
@@ -1172,13 +1108,7 @@ def foreach_batch_kn_score(
             scored = scored.where(
                 F.col("bits_per_token") <= float(max_bits_per_token)
             )
-        (
-            scored.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        atrest.write_batch(scored, out_path, batch_id)
 
     return sink
 
@@ -1227,13 +1157,7 @@ def foreach_batch_lr_score(
         )
         if min_p is not None:
             scored = scored.where(F.col("p") >= float(min_p))
-        (
-            scored.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        atrest.write_batch(scored, out_path, batch_id)
 
     return sink
 
@@ -1389,13 +1313,7 @@ def foreach_batch_warc_score(
             )
             if min_p is not None:
                 out = out.where(F.col("p") >= float(min_p))
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
+        atrest.write_batch(out, out_path, batch_id)
 
     return sink
 
@@ -1451,7 +1369,6 @@ def foreach_batch_training_shards(
     from ..operators.corpus import (
         _check_packed_cols,
         _compact_intent,
-        _hadoop_rm,
         _shard_write_gen,
         append_training_shards,
         compact_training_shards,
@@ -1460,29 +1377,15 @@ def foreach_batch_training_shards(
         write_training_shards,
     )
 
-    def _gens_on_disk(spark, p):
-        try:
-            return [
-                int(r["gen"])
-                for r in spark.read.parquet(p + "/data")
-                .select("gen")
-                .distinct()
-                .collect()
-            ]
-        except Exception:  # noqa: BLE001 — no data dir yet
-            return []
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        jmeta = spark._jvm.org.apache.hadoop.fs.Path(path + "/meta")
-        fs = jmeta.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(jmeta):
+        if not atrest.exists(spark, path + "/meta"):
             # first batch (or its replay from before the sidecar
             # committed): clean-slate init
-            _hadoop_rm(spark, path + "/data")
-            _hadoop_rm(spark, path + "/manifest")
+            atrest.rm(spark, path + "/data")
+            atrest.rm(spark, path + "/manifest")
             write_training_shards(
                 batch_df, path, n_shards=n_shards, seed=seed
             )
@@ -1490,7 +1393,7 @@ def foreach_batch_training_shards(
             intent = _compact_intent(spark, path)
             if intent is not None and any(
                 g <= int(intent["compacted_through"])
-                for g in _gens_on_disk(spark, path)
+                for g in atrest.partition_ids(spark, path + "/data", "gen")
             ):
                 # a crashed compaction is on disk — converge it with
                 # the same-id retry BEFORE touching anything else
@@ -1514,7 +1417,7 @@ def foreach_batch_training_shards(
                 append_training_shards(batch_df, path, generation=gen)
         if compact_every and (int(batch_id) + 1) % int(compact_every) == 0:
             cid = 2 * int(batch_id) + 1
-            gens = _gens_on_disk(spark, path)
+            gens = atrest.partition_ids(spark, path + "/data", "gen")
             # cid must exceed every generation on disk — on the
             # monotone id clock that is exactly "this batch's
             # compaction has not happened yet"; a REPLAYED old batch

@@ -83,6 +83,35 @@ def test_staged_timestamps_round_trip_non_utc(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", tz)
 
 
+def test_staged_timestamps_keep_offset_seconds_and_read_foreign(spark, tmp_path):
+    """New York's pre-1883 local-mean-time offset is -04:56:02: staging
+    must keep its seconds or the instant shifts by 2 s on read. And
+    read_staged with a timestamp schema accepts the common foreign
+    spellings instead of reading NULL."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        df = spark.sql("SELECT timestamp'1850-03-04 12:00:00.123456Z' AS ts")
+        path = str(tmp_path / "lmt.jsonl")
+        writers.write_jsonl(df, path, compression=None)
+        [part] = glob.glob(os.path.join(path, "part-*.json"))
+        rec = json.loads(open(part).read().splitlines()[0])
+        assert rec["ts"] == "1850-03-04T07:03:58.123456-04:56:02"
+        back = files.read_staged(spark, path, schema=df.schema)
+        micros = "unix_micros(ts) AS us"
+        assert back.selectExpr(micros).collect() == df.selectExpr(micros).collect()
+
+        foreign = tmp_path / "foreign.jsonl"
+        foreign.write_text(
+            '{"ts": "2024-02-29 12:34:56"}\n{"ts": "2024-02-29T12:34:56"}\n'
+        )
+        got = files.read_staged(spark, str(foreign), schema="ts timestamp")
+        want = spark.sql("SELECT timestamp'2024-02-29 12:34:56' AS ts")
+        assert got.selectExpr(micros).collect() == 2 * want.selectExpr(micros).collect()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
 def test_read_csv_defaults_to_strings(spark, tmp_path):
     p = tmp_path / "t.csv"
     p.write_text("a,b\n1,x\n2,y\n")
@@ -639,3 +668,66 @@ def test_read_jdbc_dbapi_unpartitioned_single_stripe(spark, tmp_path):
         schema="k string, n long",
     )
     assert sorted((r["k"], r["n"]) for r in out.collect()) == [("a", 1), ("b", 2)]
+
+
+def test_atrest_partition_ids_list_drop_and_junk_raises(spark, tmp_path):
+    """Listing partition values: an absent path is [], a partitioned
+    table lists its sorted ids, and a directory holding a junk part
+    file raises instead of reading as "no partitions"."""
+    from flask_data_pipes_spark.sinks import atrest
+
+    assert atrest.partition_ids(spark, str(tmp_path / "absent"), "gen") == []
+    table = str(tmp_path / "t")
+    for b in (3, 1):
+        atrest.write_batch(spark.range(2), table, b)
+    assert atrest.partition_ids(spark, table, "batch_id") == [1, 3]
+    atrest.drop_partitions(spark, [table], "batch_id", [1])
+    assert atrest.partition_ids(spark, table, "batch_id") == [3]
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "part-00000.parquet").write_text("garbage, not parquet")
+    with pytest.raises(Exception):
+        atrest.partition_ids(spark, str(junk), "gen")
+
+
+def test_atrest_meta_sidecar_and_bytes_round_trip(spark, tmp_path):
+    """The JSON sidecar keeps its 1-row text layout (indexes and models
+    saved earlier still load), `mode` is honored, and the byte writer
+    creates one plain file."""
+    from flask_data_pipes_spark.sinks import atrest
+
+    path = str(tmp_path / "meta")
+    atrest.write_meta(spark, path, {"seed": 7, "centers": [[0.5, 1.0]]})
+    [part] = glob.glob(os.path.join(path, "part-*"))
+    assert open(part).read() == '{"seed": 7, "centers": [[0.5, 1.0]]}\n'
+    assert atrest.read_meta(spark, path) == {"seed": 7, "centers": [[0.5, 1.0]]}
+    with pytest.raises(Exception):
+        atrest.write_meta(spark, path, {"seed": 8}, mode="error")
+    blob = str(tmp_path / "blob.bin")
+    atrest.write_bytes(spark, blob, b"\x00abc")
+    assert open(blob, "rb").read() == b"\x00abc"
+    assert atrest.exists(spark, blob)
+    atrest.rm(spark, blob)
+    assert not atrest.exists(spark, blob)
+
+
+def test_replay_safe_write_protocol_has_one_home():
+    """The dynamic-overwrite write, the raw Hadoop-FS calls and the
+    JSON sidecar live only in `sinks/atrest.py`; every other module
+    calls its functions, so no hand-written copy can drift."""
+    import pathlib
+
+    pkg = pathlib.Path(writers.__file__).resolve().parents[1]
+    home = pkg / "sinks" / "atrest.py"
+    copies = [
+        f"{p.relative_to(pkg)}:{n}"
+        for p in sorted(pkg.rglob("*.py"))
+        if p != home
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if any(
+            s in line
+            for s in ("partitionOverwriteMode", "hadoop.fs.Path(", '"meta string"')
+        )
+    ]
+    assert copies == []
+    assert "partitionOverwriteMode" in home.read_text()

@@ -733,7 +733,7 @@ def test_compact_training_shards_crash_mid_delete_recovery(
 
     before = rows(C.read_training_shards(spark, path))
 
-    real_rm = C._hadoop_rm
+    real_rm = C.atrest.rm
     calls = {"n": 0}
 
     def crashing_rm(spark_, p):
@@ -745,10 +745,10 @@ def test_compact_training_shards_crash_mid_delete_recovery(
         if calls["n"] >= 4:
             raise RuntimeError("injected crash mid-delete")
 
-    monkeypatch.setattr(C, "_hadoop_rm", crashing_rm)
+    monkeypatch.setattr(C.atrest, "rm", crashing_rm)
     with _pytest.raises(RuntimeError, match="injected crash"):
         C.compact_training_shards(spark, path, generation=3)
-    monkeypatch.setattr(C, "_hadoop_rm", real_rm)
+    monkeypatch.setattr(C.atrest, "rm", real_rm)
 
     gens = sorted(
         int(d.split("=")[1])

@@ -528,11 +528,10 @@ def test_incremental_dedup_dupe_set_materialized_once(spark, tmp_path):
 
 
 def test_foreach_batch_incremental_dedup_output_before_history(spark, tmp_path):
-    """Crash-window ordering (round-4 advice): the OUTPUT sink is
-    written before the history, so a failure between the two writes
-    leaves the rows present in out_path (replay duplicates, recoverable
-    by downstream fp-dedup) rather than silently absent forever (the
-    history-first order made replays emit nothing). Simulated by
+    """Crash window between the two writes: the OUTPUT sink is written
+    before the history, so a failure between them leaves the rows in
+    out_path, never silently absent (the replay then overwrites that
+    partition — see the exactly-once test below). Simulated by
     pointing history at an unwritable path: the sink must raise, and
     out_path must already contain the batch. Also: a transient
     history-READ failure must fail the batch loudly, never masquerade
@@ -573,6 +572,47 @@ def test_foreach_batch_incremental_dedup_output_before_history(spark, tmp_path):
     )
     with _pytest.raises(Exception):
         sink2(batch, 0)
+
+
+def test_foreach_batch_incremental_dedup_replay_after_crash_exactly_once(
+    spark, tmp_path
+):
+    """A crash between the out_path write and the history write, then
+    a replay of the same batch: out_path holds each fingerprint once
+    (the replay overwrites its own batch_id partition instead of
+    appending a second copy), and the history is complete. A later
+    batch still dedups against the replayed history."""
+    from flask_data_pipes_spark.streaming.stream import (
+        foreach_batch_incremental_dedup,
+    )
+
+    out = str(tmp_path / "out")
+    blocker = tmp_path / "blocker"
+    blocker.write_text("not a dir")  # history's parent is a file
+    hist = str(blocker / "hist")
+    sink = foreach_batch_incremental_dedup(
+        hist, out_path=out, m_bits=256, k=3
+    )
+    schema = "doc_id long, fingerprint string"
+    batch0 = spark.createDataFrame([(1, "fa"), (2, "fb")], schema)
+    with pytest.raises(Exception):
+        sink(batch0, 0)
+    blocker.unlink()
+
+    sink(batch0, 0)  # the replay Spark runs after the crash
+
+    def fps(path):
+        return sorted(
+            r["fingerprint"] for r in spark.read.parquet(path).collect()
+        )
+
+    assert fps(out) == ["fa", "fb"]
+    assert fps(hist) == ["fa", "fb"]
+    sink(spark.createDataFrame([(3, "fb"), (4, "fc")], schema), 1)
+    assert fps(out) == ["fa", "fb", "fc"]
+    assert fps(hist) == ["fa", "fb", "fc"]
+    parts = sorted(d for d in os.listdir(out) if not d.startswith((".", "_")))
+    assert parts == ["batch_id=0", "batch_id=1"]
 
 
 def test_foreach_batch_cms_cross_batch_and_replay_idempotent(spark, tmp_path):
