@@ -43,6 +43,7 @@ __all__ = [
     "lenient_time",
     "epoch_us",
     "epoch_seconds",
+    "zorder_key",
 ]
 
 ColumnOrName = Union[Column, str]

@@ -40,6 +40,12 @@ __all__ = [
     "pseudo_weights",
     "hashed_linear_score",
     "STOPWORDS",
+    "prefix_fingerprint",
+    "char_entropy",
+    "quality_score_from",
+    "chunk_tokens",
+    "language_hits",
+    "language_argmax",
 ]
 
 ColumnOrName = Union[Column, str]

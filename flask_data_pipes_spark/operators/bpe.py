@@ -48,6 +48,8 @@ __all__ = [
     "train_alphabet",
     "validate_special_tokens",
     "split_words_col",
+    "assemble_position_ids",
+    "decode_ids",
 ]
 
 # --- byte fallback + special tokens (round 11) -------------------------------

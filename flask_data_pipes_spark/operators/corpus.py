@@ -62,6 +62,21 @@ __all__ = [
     "write_training_shards",
     "read_training_shards",
     "verify_training_shards",
+    "training_shard_params",
+    "append_training_shards",
+    "compaction_watermark",
+    "compact_training_shards",
+    "unpack_bins_ids",
+    "KNModel",
+    "kn_model",
+    "kn_model_save",
+    "kn_model_load",
+    "kn_score",
+    "JMBigramModel",
+    "jm_bigram_model",
+    "jm_bigram_model_save",
+    "jm_bigram_model_load",
+    "jm_bigram_score",
 ]
 
 
@@ -184,6 +199,31 @@ def shuffle_shards(
     )
 
 
+def _dbl(c: str):
+    return F.col(c).cast("double")
+
+
+def _doc_rollup(
+    scored: DataFrame, id_col: str, logp_col: str,
+    n_name: str, bits_name: str, round_out: int, *extra,
+) -> DataFrame:
+    """The LM family's per-document rollup: (id, n_name, *extra,
+    avg_logp, bits_name) over rows carrying one log-prob `logp_col`
+    each. The log-probs sum EXACTLY as DECIMAL(38,9) (float addition
+    orders differ between engines/partitions); the mean is a double
+    division only after that sum is fixed; bits = -avg_logp / ln 2.
+    `extra` are further aggregates over the same rows (the split
+    scorers' n_unseen)."""
+    n = F.count(F.lit(1))
+    avg = F.sum(F.col(logp_col).cast("decimal(38,9)")).cast("double") / n
+    return scored.groupBy(id_col).agg(
+        n.alias(n_name),
+        *extra,
+        F.round(avg, round_out).alias("avg_logp"),
+        F.round(-avg / F.log(F.lit(2.0)), round_out).alias(bits_name),
+    )
+
+
 def unigram_logprob(
     df: DataFrame,
     text_col: str = "text",
@@ -227,20 +267,12 @@ def unigram_logprob(
             ).alias("__logp"),
         )
     )
-    sum_dec = F.sum(F.col("__logp").cast("decimal(38,9)"))
-    n = F.count(F.lit(1))
-    avg = sum_dec.cast("double") / n  # double division AFTER the exact sum
     # logp is vocabulary-sized (unbounded at corpus scale) — no forced
     # broadcast; the token-keyed shuffle join is the honest 100 TB
     # shape and AQE still picks broadcast when logp measures small.
-    return (
-        posts.join(logp, "__tok")
-        .groupBy(id_col)
-        .agg(
-            n.alias("n_tok"),
-            F.round(avg, round_out).alias("avg_logp"),
-            F.round(-avg / F.log(F.lit(2.0)), round_out).alias("bits_per_token"),
-        )
+    return _doc_rollup(
+        posts.join(logp, "__tok"),
+        id_col, "__logp", "n_tok", "bits_per_token", round_out,
     )
 
 
@@ -646,73 +678,18 @@ def bigram_logprob(
     - bigram counts shuffle keyed by the pair (Heaps-bounded far
       below the pair stream); CONTEXT counts derive from the bigram
       table (sum over cur), not a second corpus pass;
-    - the scoring join is one shuffle join of the pair stream against
-      the bigram table on (prev, cur) — context count and unigram
+    - the scoring join is one inner shuffle join of the pair stream
+      against `jm_bigram_model`'s bigram table on (prev, cur), which
+      holds every pair of the corpus — context count and unigram
       probability ride along via a vocabulary-keyed join and a
       broadcast 1-row total;
     - final per-doc aggregation shuffles once keyed by id.
     """
-    toks = T.whitespace_tokens(F.lower(F.col(text_col)))
-    base = spread_for_cpu(
-        df.filter(F.trim(F.col(text_col)) != ""), id_col
-    ).select(F.col(id_col), toks.alias("__t"))
-    pair_arr = F.transform(
-        F.sequence(F.lit(2), F.size("__t")),
-        lambda i: F.struct(
-            F.element_at("__t", i - 1).alias("p"),
-            F.element_at("__t", i).alias("c"),
-        ),
-    )
-    pairs = (
-        base.filter(F.size("__t") >= 2)
-        .select(id_col, F.explode_outer(pair_arr).alias("__pc"))
-        .where(F.col("__pc").isNotNull())
-        .select(id_col, F.col("__pc.p").alias("__p"), F.col("__pc.c").alias("__c"))
-    )
-    uni = (
-        base.select(F.explode_outer("__t").alias("__tok"))
-        .where(F.col("__tok").isNotNull())
-        .groupBy("__tok")
-        .agg(F.count(F.lit(1)).alias("__cu"))
-    )
-    total = uni.agg(F.sum("__cu").alias("__T"))
-    big = pairs.groupBy("__p", "__c").agg(F.count(F.lit(1)).alias("__cb"))
-    ctx = big.groupBy("__p").agg(F.sum("__cb").alias("__cp"))
-    # uni is vocabulary-sized (unbounded under Heaps' law at corpus
-    # scale) — never force-broadcast it; big is already in a shuffle
-    # for the ctx join, so the vocabulary join shuffles model-grain
-    # rows only, and AQE may still broadcast when uni measures small.
-    prob = (
-        big.join(ctx, "__p")
-        .join(uni.withColumnRenamed("__tok", "__c"), "__c")
-        .join(F.broadcast(total))
-        .select(
-            "__p",
-            "__c",
-            F.round(
-                F.log(
-                    F.lit(lam)
-                    * (F.col("__cb").cast("double") / F.col("__cp").cast("double"))
-                    + F.lit(1.0 - lam)
-                    * (F.col("__cu").cast("double") / F.col("__T").cast("double"))
-                ),
-                round_term,
-            ).alias("__logp"),
-        )
-    )
-    sum_dec = F.sum(F.col("__logp").cast("decimal(38,9)"))
-    n = F.count(F.lit(1))
-    avg = sum_dec.cast("double") / n
-    return (
-        pairs.join(prob, ["__p", "__c"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_bigrams"),
-            F.round(avg, round_out).alias("avg_logp"),
-            F.round(-avg / F.log(F.lit(2.0)), round_out).alias(
-                "bits_per_bigram"
-            ),
-        )
+    base, pairs = _jm_pairs(df, text_col, id_col)
+    model = _jm_tables(base, pairs, lam, round_term)
+    return _doc_rollup(
+        pairs.join(model.big, ["__p", "__c"]),
+        id_col, "__logp", "n_bigrams", "bits_per_bigram", round_out,
     )
 
 
@@ -2158,91 +2135,14 @@ def kn_trigram_logprob(
     probability is assembled model-side (joins between model-sized
     tables), so SCORING is one shuffle join of the trigram stream
     against the finished probability table plus one doc-keyed rollup.
-    No window, no Python, no per-row UDF."""
-    D = float(discount)
+    The tables are `kn_model`'s; every trigram of the corpus is in its
+    own model, so that join is inner and `kn_score`'s backoff cascade
+    never runs. No window, no Python, no per-row UDF."""
     stream = _kn_stream(df, text_col, id_col)
-    tri = stream.groupBy("__w1", "__w2", "__w3").agg(
-        F.count(F.lit(1)).alias("__c3")
-    )
-    ctx12 = tri.groupBy("__w1", "__w2").agg(
-        F.sum("__c3").alias("__c12"),
-        F.count(F.lit(1)).alias("__n12"),  # N1+(w1w2·)
-    )
-    chat = tri.groupBy("__w2", "__w3").agg(
-        F.count(F.lit(1)).alias("__ch")  # ĉ(w2w3) = N1+(·w2w3)
-    )
-    chctx = chat.groupBy("__w2").agg(
-        F.sum("__ch").alias("__chs"),  # ĉ(w2·) = N1+(·w2·)
-        F.count(F.lit(1)).alias("__n2"),  # N1+(w2·)
-    )
-    contw = chat.groupBy("__w3").agg(
-        F.count(F.lit(1)).alias("__cw")  # N1+(·w3)
-    )
-    tot = chat.agg(F.count(F.lit(1)).alias("__tot"))  # N1+(··)
-    # NO broadcast hint on contw: it is one row per DISTINCT token, an
-    # unbounded (Heaps-law) cardinality that would OOM the driver at
-    # corpus scale if forced resident. chat is already shuffle-joined
-    # on __w2, so adding the __w3 key costs nothing at model grain,
-    # and AQE may still pick a broadcast when contw measures small.
-    # The 1-row `tot` broadcast below is a bounded literal — fine.
-    pbig = (
-        chat.join(chctx, "__w2")
-        .join(contw, "__w3")
-        .join(F.broadcast(tot))
-        .select(
-            "__w2",
-            "__w3",
-            (
-                F.greatest(
-                    F.col("__ch").cast("double") - F.lit(D), F.lit(0.0)
-                )
-                / F.col("__chs").cast("double")
-                + F.lit(D)
-                * F.col("__n2").cast("double")
-                / F.col("__chs").cast("double")
-                * (
-                    F.col("__cw").cast("double")
-                    / F.col("__tot").cast("double")
-                )
-            ).alias("__pb"),
-        )
-    )
-    prob = (
-        tri.join(ctx12, ["__w1", "__w2"])
-        .join(pbig, ["__w2", "__w3"])
-        .select(
-            "__w1",
-            "__w2",
-            "__w3",
-            F.round(
-                F.log(
-                    F.greatest(
-                        F.col("__c3").cast("double") - F.lit(D),
-                        F.lit(0.0),
-                    )
-                    / F.col("__c12").cast("double")
-                    + F.lit(D)
-                    * F.col("__n12").cast("double")
-                    / F.col("__c12").cast("double")
-                    * F.col("__pb")
-                ),
-                round_term,
-            ).alias("__logp"),
-        )
-    )
-    sum_dec = F.sum(F.col("__logp").cast("decimal(38,9)"))
-    n = F.count(F.lit(1))
-    avg = sum_dec.cast("double") / n
-    return (
-        stream.join(prob, ["__w1", "__w2", "__w3"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_tokens"),
-            F.round(avg, round_out).alias("avg_logp"),
-            F.round(-avg / F.log(F.lit(2.0)), round_out).alias(
-                "bits_per_token"
-            ),
-        )
+    model = _kn_tables(stream, discount, round_term)
+    return _doc_rollup(
+        stream.join(model.tri, ["__w1", "__w2", "__w3"]),
+        id_col, "__logp", "n_tokens", "bits_per_token", round_out,
     )
 
 
@@ -2256,11 +2156,12 @@ class KNModel:
     re-paying the count aggregations — the CCNet/KenLM
     train-on-A-score-B workflow.
 
-    Tables (all derived from ONE trigram count aggregation over the
-    training corpus, Heaps-bounded far below its token stream):
+    `kn_trigram_logprob` is built from the same tables (see
+    `kn_model`). Tables (all derived from ONE trigram count
+    aggregation over the training corpus, Heaps-bounded far below its
+    token stream):
       tri   (__w1,__w2,__w3,__logp) — full interpolated log-prob for
-            every trigram SEEN in training (identical arithmetic to
-            `kn_trigram_logprob`'s prob table);
+            every trigram SEEN in training;
       ctx12 (__w1,__w2,__lam12)     — backoff weight D·N1+(w1w2·)/c(w1w2·);
       big   (__w2,__w3,__pb)        — continuation-count bigram prob P(w3|w2);
       ctx2  (__w2,__lam2)           — backoff weight D·N1+(w2·)/ĉ(w2·);
@@ -2289,110 +2190,80 @@ def kn_model(
     discount: float = 0.75,
     round_term: int = 9,
 ) -> KNModel:
-    """Build the KN trigram model tables from a TRAINING corpus.
-    The seen-trigram log-probs use byte-identical arithmetic (same
-    operation order, same rounding) to `kn_trigram_logprob`, so
-    scoring the training corpus itself with `kn_score` reproduces the
-    combined operator exactly (law-tested in tests/test_kn.py).
+    """Build the KN trigram model tables from a TRAINING corpus. The
+    combined `kn_trigram_logprob` is these tables plus one inner join
+    of the corpus's own trigram stream to `tri` — every trigram it
+    looks up is seen, so it never backs off — which is why scoring the
+    training corpus with `kn_score` reproduces it exactly (law-tested
+    in tests/test_kn.py).
 
-    Scale: identical to the combined operator's model half — n-gram-
-    keyed aggregations with map-side combine; no vocabulary-sized
-    broadcast anywhere (the only hinted broadcast is the 1-row
-    total)."""
+    Scale: n-gram-keyed aggregations with map-side combine; no
+    vocabulary-sized broadcast anywhere (the only hinted broadcast is
+    the 1-row total)."""
+    return _kn_tables(_kn_stream(df, text_col, id_col), discount, round_term)
+
+
+def _kn_tables(stream: DataFrame, discount: float, round_term: int) -> KNModel:
+    """`kn_model`'s tables over an already-built `_kn_stream`, so the
+    combined scorer can build its stream once and join it back."""
     D = float(discount)
-    stream = _kn_stream(df, text_col, id_col)
+
+    def lam(n: str, ctx: str):  # backoff weight D·N1+(ctx·)/c(ctx)
+        return F.lit(D) * _dbl(n) / _dbl(ctx)
+
+    def interp(c: str, n: str, ctx: str, lower):  # one level of the KN mixture
+        return F.greatest(_dbl(c) - F.lit(D), F.lit(0.0)) / _dbl(ctx) + lam(n, ctx) * lower
+
     tri = stream.groupBy("__w1", "__w2", "__w3").agg(
         F.count(F.lit(1)).alias("__c3")
     )
     ctx12 = tri.groupBy("__w1", "__w2").agg(
         F.sum("__c3").alias("__c12"),
-        F.count(F.lit(1)).alias("__n12"),
+        F.count(F.lit(1)).alias("__n12"),  # N1+(w1w2·)
     )
     chat = tri.groupBy("__w2", "__w3").agg(
-        F.count(F.lit(1)).alias("__ch")
+        F.count(F.lit(1)).alias("__ch")  # ĉ(w2w3) = N1+(·w2w3)
     )
     chctx = chat.groupBy("__w2").agg(
-        F.sum("__ch").alias("__chs"),
-        F.count(F.lit(1)).alias("__n2"),
+        F.sum("__ch").alias("__chs"),  # ĉ(w2·) = N1+(·w2·)
+        F.count(F.lit(1)).alias("__n2"),  # N1+(w2·)
     )
-    contw = chat.groupBy("__w3").agg(F.count(F.lit(1)).alias("__cw"))
-    tot = chat.agg(F.count(F.lit(1)).alias("__tot"))
+    contw = chat.groupBy("__w3").agg(
+        F.count(F.lit(1)).alias("__cw")  # N1+(·w3)
+    )
+    tot = chat.agg(F.count(F.lit(1)).alias("__tot"))  # N1+(··)
+    pcont = _dbl("__cw") / _dbl("__tot")
+    # NO broadcast hint on contw: it is one row per DISTINCT token, an
+    # unbounded (Heaps-law) cardinality that would OOM the driver at
+    # corpus scale if forced resident. chat is already shuffle-joined
+    # on __w2, so adding the __w3 key costs nothing at model grain,
+    # and AQE may still pick a broadcast when contw measures small.
+    # The 1-row `tot` broadcast below is a bounded literal — fine.
     big = (
         chat.join(chctx, "__w2")
         .join(contw, "__w3")
         .join(F.broadcast(tot))
         .select(
-            "__w2",
-            "__w3",
-            (
-                F.greatest(
-                    F.col("__ch").cast("double") - F.lit(D), F.lit(0.0)
-                )
-                / F.col("__chs").cast("double")
-                + F.lit(D)
-                * F.col("__n2").cast("double")
-                / F.col("__chs").cast("double")
-                * (
-                    F.col("__cw").cast("double")
-                    / F.col("__tot").cast("double")
-                )
-            ).alias("__pb"),
+            "__w2", "__w3",
+            interp("__ch", "__n2", "__chs", pcont).alias("__pb"),
         )
     )
     tri_logp = (
         tri.join(ctx12, ["__w1", "__w2"])
         .join(big, ["__w2", "__w3"])
         .select(
-            "__w1",
-            "__w2",
-            "__w3",
+            "__w1", "__w2", "__w3",
             F.round(
-                F.log(
-                    F.greatest(
-                        F.col("__c3").cast("double") - F.lit(D),
-                        F.lit(0.0),
-                    )
-                    / F.col("__c12").cast("double")
-                    + F.lit(D)
-                    * F.col("__n12").cast("double")
-                    / F.col("__c12").cast("double")
-                    * F.col("__pb")
-                ),
+                F.log(interp("__c3", "__n12", "__c12", F.col("__pb"))),
                 round_term,
             ).alias("__logp"),
         )
     )
-    ctx12_lam = ctx12.select(
-        "__w1",
-        "__w2",
-        (
-            F.lit(D)
-            * F.col("__n12").cast("double")
-            / F.col("__c12").cast("double")
-        ).alias("__lam12"),
-    )
-    ctx2_lam = chctx.select(
-        "__w2",
-        (
-            F.lit(D)
-            * F.col("__n2").cast("double")
-            / F.col("__chs").cast("double")
-        ).alias("__lam2"),
-    )
-    uni = (
-        contw.join(F.broadcast(tot))
-        .select(
-            "__w3",
-            (
-                F.col("__cw").cast("double")
-                / F.col("__tot").cast("double")
-            ).alias("__pc"),
-        )
-    )
     return KNModel(
-        tri=tri_logp, ctx12=ctx12_lam, big=big.select("__w2", "__w3", "__pb"),
-        ctx2=ctx2_lam, uni=uni, tot=tot,
-        discount=D, round_term=round_term,
+        tri=tri_logp, big=big, tot=tot, discount=D, round_term=round_term,
+        ctx12=ctx12.select("__w1", "__w2", lam("__n12", "__c12").alias("__lam12")),
+        ctx2=chctx.select("__w2", lam("__n2", "__chs").alias("__lam2")),
+        uni=contw.join(F.broadcast(tot)).select("__w3", pcont.alias("__pc")),
     )
 
 
@@ -2402,29 +2273,33 @@ def kn_model_save(spark, model: KNModel, path: str) -> None:
     model is FORCED onto the training discount/rounding). Doubles
     round-trip bit-exactly through parquet, so a loaded model scores
     byte-identically to the in-memory one (round-trip-tested)."""
-    for name in ("tri", "ctx12", "big", "ctx2", "uni", "tot"):
-        getattr(model, name).write.mode("overwrite").parquet(
-            f"{path}/{name}"
-        )
-    atrest.write_meta(
-        spark,
-        f"{path}/meta",
-        {"discount": model.discount, "round_term": model.round_term},
-    )
+    meta = {"discount": model.discount, "round_term": model.round_term}
+    _lm_save(spark, model, _KN_TABLES, meta, path)
 
 
 def kn_model_load(spark, path: str) -> KNModel:
     """Reload a `kn_model_save`d model (lazy parquet scans — nothing
     is collected; the model tables behave exactly like the in-memory
     builder's)."""
-    meta = atrest.read_meta(spark, f"{path}/meta")
-    frames = {
-        name: spark.read.parquet(f"{path}/{name}")
-        for name in ("tri", "ctx12", "big", "ctx2", "uni", "tot")
-    }
-    return KNModel(
-        discount=meta["discount"], round_term=meta["round_term"], **frames
-    )
+    return KNModel(**_lm_load(spark, _KN_TABLES, path))
+
+
+_KN_TABLES = ("tri", "ctx12", "big", "ctx2", "uni", "tot")
+_JM_TABLES = ("big", "uni", "tot")
+
+
+def _lm_save(spark, model, tables, meta: dict, path: str) -> None:
+    """An LM model at rest: one parquet directory per table + `meta`."""
+    for name in tables:
+        getattr(model, name).write.mode("overwrite").parquet(f"{path}/{name}")
+    atrest.write_meta(spark, f"{path}/meta", meta)
+
+
+def _lm_load(spark, tables, path: str) -> dict:
+    """`_lm_save`'s tables (lazy scans) and params, as constructor
+    keyword arguments."""
+    frames = {name: spark.read.parquet(f"{path}/{name}") for name in tables}
+    return {**frames, **atrest.read_meta(spark, f"{path}/meta")}
 
 
 def kn_score(
@@ -2436,8 +2311,8 @@ def kn_score(
 ) -> DataFrame:
     """Score a corpus under a TRAINED KN model — the other half of the
     train-on-A-score-B split. Trigrams seen in training take their
-    stored interpolated log-prob (bit-identical to the combined
-    operator); unseen trigrams back off with the standard KN cascade:
+    stored interpolated log-prob (the `tri` table the combined
+    operator joins); unseen trigrams back off with the standard KN cascade:
 
         seen ctx (w1w2):  P = λ(w1w2) · P(w3|w2)
         unseen ctx:       P = P(w3|w2)
@@ -2490,27 +2365,17 @@ def kn_score(
         ).alias("__lp"),
         F.col("__logp").isNull().cast("long").alias("__miss"),
     )
-    sum_dec = F.sum(F.col("__lp").cast("decimal(38,9)"))
-    n = F.count(F.lit(1))
-    avg = sum_dec.cast("double") / n
-    return (
-        stream.join(bprob, ["__w1", "__w2", "__w3"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_tokens"),
-            F.sum("__miss").cast("long").alias("n_unseen"),
-            F.round(avg, round_out).alias("avg_logp"),
-            F.round(-avg / F.log(F.lit(2.0)), round_out).alias(
-                "bits_per_token"
-            ),
-        )
+    return _doc_rollup(
+        stream.join(bprob, ["__w1", "__w2", "__w3"]),
+        id_col, "__lp", "n_tokens", "bits_per_token", round_out,
+        F.sum("__miss").cast("long").alias("n_unseen"),
     )
 
 
 class JMBigramModel:
-    """The Jelinek-Mercer bigram twin of `KNModel` — model tables for
-    `bigram_logprob`'s interpolated mixture, split out so the LM can
-    train on corpus A and score corpus B (see `jm_bigram_model`/
+    """The Jelinek-Mercer bigram twin of `KNModel` — the model tables
+    `bigram_logprob` is built from, also usable on their own so the LM
+    can train on corpus A and score corpus B (see `jm_bigram_model`/
     `jm_bigram_score`). Tables: big (__p,__c,__logp) for pairs seen in
     training; uni (__c,__pu) unigram probs; tot (__T) 1-row token
     total (also the OOV floor denominator, P(unseen token) :=
@@ -2531,12 +2396,21 @@ def jm_bigram_model(
     lam: float = 0.75,
     round_term: int = 9,
 ) -> JMBigramModel:
-    """Build `bigram_logprob`'s model tables from a TRAINING corpus —
-    byte-identical arithmetic to the combined operator (law-tested:
-    scoring the training corpus reproduces it exactly). Same shapes:
-    pair-keyed counts with map-side combine, context counts derived
-    from the bigram table, 1-row total as the only hinted broadcast."""
-    L = float(lam)
+    """Build the JM bigram model tables from a TRAINING corpus. The
+    combined `bigram_logprob` is these tables plus one inner join of
+    the corpus's own pair stream to `big` (every pair is seen), so
+    scoring the training corpus with `jm_bigram_score` reproduces it
+    exactly (law-tested). Shapes: pair-keyed counts with map-side
+    combine, context counts derived from the bigram table, 1-row total
+    as the only hinted broadcast."""
+    return _jm_tables(*_jm_pairs(df, text_col, id_col), lam, round_term)
+
+
+def _jm_pairs(df: DataFrame, text_col: str, id_col: str):
+    """(base, pairs) shared by the JM bigram functions: base is
+    (id, __t), the lowered token array of every non-blank document;
+    pairs is (id, __p, __c), its adjacent-token stream — one
+    transform+explode, never wider than the token stream."""
     toks = T.whitespace_tokens(F.lower(F.col(text_col)))
     base = spread_for_cpu(
         df.filter(F.trim(F.col(text_col)) != ""), id_col
@@ -2552,8 +2426,16 @@ def jm_bigram_model(
         base.filter(F.size("__t") >= 2)
         .select(id_col, F.explode_outer(pair_arr).alias("__pc"))
         .where(F.col("__pc").isNotNull())
-        .select(F.col("__pc.p").alias("__p"), F.col("__pc.c").alias("__c"))
+        .select(id_col, F.col("__pc.p").alias("__p"), F.col("__pc.c").alias("__c"))
     )
+    return base, pairs
+
+
+def _jm_tables(
+    base: DataFrame, pairs: DataFrame, lam: float, round_term: int
+) -> JMBigramModel:
+    """`jm_bigram_model`'s tables over `_jm_pairs`' frames."""
+    L = float(lam)
     uni = (
         base.select(F.explode_outer("__t").alias("__tok"))
         .where(F.col("__tok").isNotNull())
@@ -2563,57 +2445,39 @@ def jm_bigram_model(
     total = uni.agg(F.sum("__cu").alias("__T"))
     big = pairs.groupBy("__p", "__c").agg(F.count(F.lit(1)).alias("__cb"))
     ctx = big.groupBy("__p").agg(F.sum("__cb").alias("__cp"))
+    # uni is vocabulary-sized (unbounded under Heaps' law at corpus
+    # scale) — never force-broadcast it; big is already in a shuffle
+    # for the ctx join, so the vocabulary join shuffles model-grain
+    # rows only, and AQE may still broadcast when uni measures small.
+    pu = _dbl("__cu") / _dbl("__T")
     prob = (
         big.join(ctx, "__p")
         .join(uni.withColumnRenamed("__tok", "__c"), "__c")
         .join(F.broadcast(total))
         .select(
-            "__p",
-            "__c",
+            "__p", "__c",
             F.round(
-                F.log(
-                    F.lit(L)
-                    * (F.col("__cb").cast("double") / F.col("__cp").cast("double"))
-                    + F.lit(1.0 - L)
-                    * (F.col("__cu").cast("double") / F.col("__T").cast("double"))
-                ),
+                F.log(F.lit(L) * (_dbl("__cb") / _dbl("__cp")) + F.lit(1.0 - L) * pu),
                 round_term,
             ).alias("__logp"),
         )
     )
     puni = uni.join(F.broadcast(total)).select(
-        F.col("__tok").alias("__c"),
-        (F.col("__cu").cast("double") / F.col("__T").cast("double")).alias(
-            "__pu"
-        ),
+        F.col("__tok").alias("__c"), pu.alias("__pu")
     )
-    return JMBigramModel(
-        big=prob, uni=puni, tot=total, lam=L, round_term=round_term
-    )
+    return JMBigramModel(big=prob, uni=puni, tot=total, lam=L, round_term=round_term)
 
 
 def jm_bigram_model_save(spark, model: JMBigramModel, path: str) -> None:
     """Persist a JMBigramModel (parquet tables + JSON param sidecar;
     same discipline as `kn_model_save`)."""
-    for name in ("big", "uni", "tot"):
-        getattr(model, name).write.mode("overwrite").parquet(
-            f"{path}/{name}"
-        )
-    atrest.write_meta(
-        spark, f"{path}/meta", {"lam": model.lam, "round_term": model.round_term}
-    )
+    meta = {"lam": model.lam, "round_term": model.round_term}
+    _lm_save(spark, model, _JM_TABLES, meta, path)
 
 
 def jm_bigram_model_load(spark, path: str) -> JMBigramModel:
     """Reload a `jm_bigram_model_save`d model (lazy parquet scans)."""
-    meta = atrest.read_meta(spark, f"{path}/meta")
-    return JMBigramModel(
-        big=spark.read.parquet(f"{path}/big"),
-        uni=spark.read.parquet(f"{path}/uni"),
-        tot=spark.read.parquet(f"{path}/tot"),
-        lam=meta["lam"],
-        round_term=meta["round_term"],
-    )
+    return JMBigramModel(**_lm_load(spark, _JM_TABLES, path))
 
 
 def jm_bigram_score(
@@ -2633,23 +2497,7 @@ def jm_bigram_score(
     then one stream join + one doc rollup (see `kn_score`)."""
     L = model.lam
     rt = model.round_term
-    toks = T.whitespace_tokens(F.lower(F.col(text_col)))
-    base = spread_for_cpu(
-        df.filter(F.trim(F.col(text_col)) != ""), id_col
-    ).select(F.col(id_col), toks.alias("__t"))
-    pair_arr = F.transform(
-        F.sequence(F.lit(2), F.size("__t")),
-        lambda i: F.struct(
-            F.element_at("__t", i - 1).alias("p"),
-            F.element_at("__t", i).alias("c"),
-        ),
-    )
-    pairs = (
-        base.filter(F.size("__t") >= 2)
-        .select(id_col, F.explode_outer(pair_arr).alias("__pc"))
-        .where(F.col("__pc").isNotNull())
-        .select(id_col, F.col("__pc.p").alias("__p"), F.col("__pc.c").alias("__c"))
-    )
+    _, pairs = _jm_pairs(df, text_col, id_col)
     bp = pairs.select("__p", "__c").distinct()
     joined = (
         bp.join(model.big, ["__p", "__c"], "left")
@@ -2669,18 +2517,8 @@ def jm_bigram_score(
         ).alias("__lp"),
         F.col("__logp").isNull().cast("long").alias("__miss"),
     )
-    sum_dec = F.sum(F.col("__lp").cast("decimal(38,9)"))
-    n = F.count(F.lit(1))
-    avg = sum_dec.cast("double") / n
-    return (
-        pairs.join(bprob, ["__p", "__c"])
-        .groupBy(id_col)
-        .agg(
-            n.cast("long").alias("n_bigrams"),
-            F.sum("__miss").cast("long").alias("n_unseen"),
-            F.round(avg, round_out).alias("avg_logp"),
-            F.round(-avg / F.log(F.lit(2.0)), round_out).alias(
-                "bits_per_bigram"
-            ),
-        )
+    return _doc_rollup(
+        pairs.join(bprob, ["__p", "__c"]),
+        id_col, "__lp", "n_bigrams", "bits_per_bigram", round_out,
+        F.sum("__miss").cast("long").alias("n_unseen"),
     )

@@ -56,6 +56,12 @@ __all__ = [
     "lsh_index_match",
     "lsh_match_report",
     "lsh_index_dedup_append",
+    "repeated_ngram_dedup",
+    "with_simhash",
+    "simhash_pairs",
+    "semdedup_planes_for",
+    "semdedup_keep",
+    "lsh_index_compact",
 ]
 
 
@@ -635,28 +641,20 @@ def simhash(
     text_col: str = "text",
     id_col: str = "doc_id",
     bits: int = 16,
-    vectorized: bool = True,
 ) -> DataFrame:
     """(id, simhash): bit b set when ≥half the distinct-token hashes
     have bit b set. Near-dups land at small Hamming distance; bucket by
     simhash prefix for the scale path.
 
-    `vectorized=True` (default) runs the majority vote as an Arrow
-    batch (`_simhash_vote_vectorized`, integer-exact); False keeps the
-    pure-expression fold (`_simhash_total`) for plans that must stay
-    entirely JVM-side."""
+    The majority vote runs as an Arrow batch
+    (`_simhash_vote_vectorized`, integer-exact)."""
     toks = F.array_distinct(T.whitespace_tokens(F.lower(F.col(text_col))))
     hs = F.transform(toks, lambda x: T.md5_long(x, 7))
     # cheap scan-stage pre-filter (⟺ size(tokens) > 0, null-rejecting);
     # see minhash_bands for why the filter must not be expression-heavy.
-    staged = spread_for_cpu(
+    return spread_for_cpu(
         df.filter(F.trim(F.col(text_col)) != ""), id_col
-    ).select(id_col, hs.alias("__hs"), F.size(toks).alias("__n"))
-    if vectorized:
-        sh = _simhash_vote_vectorized(bits)(F.col("__hs"))
-    else:
-        sh = _simhash_total(F.col("__hs"), F.col("__n"), bits)
-    return staged.select(id_col, sh.alias("simhash"))
+    ).select(id_col, _simhash_vote_vectorized(bits)(hs).alias("simhash"))
 
 
 def with_simhash(

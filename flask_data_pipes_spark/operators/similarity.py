@@ -55,6 +55,7 @@ __all__ = [
     "random_projection",
     "retrieval_metrics",
     "cluster_balanced_sample",
+    "threshold_matches",
 ]
 
 
@@ -1069,6 +1070,58 @@ def pq_fit(
     return PqIndex(codes, [[list(map(float, c)) for c in bk] for bk in books], id_col)
 
 
+def _pq_cand_schema(query_id_col: str, id_col: str) -> str:
+    return f"{query_id_col} long, {id_col} long, sim_approx double"
+
+
+def _pq_rank(
+    partial: DataFrame, queries: DataFrame, corpus: Optional[DataFrame],
+    k: int, n_keep: int, id_col: str, vec_col: str, query_id_col: str,
+    round_to: Optional[int],
+) -> DataFrame:
+    """The tail shared by `pq_search` and `ivfpq_search`: rank the
+    per-partition ADC candidates `partial` (qid, id, sim_approx) per
+    query and keep the top `n_keep`. Without `corpus` those come back
+    as (qid, id, sim_approx, rnk); with it they are re-ranked by EXACT
+    cosine against the raw vectors → top k as (qid, id, sim, rnk)."""
+    wa = Window.partitionBy(query_id_col).orderBy(
+        F.desc("sim_approx"), F.asc(id_col)
+    )
+    cand = partial.withColumn("__arnk", F.row_number().over(wa)).filter(
+        F.col("__arnk") <= n_keep
+    )
+    if corpus is None:
+        approx = F.col("sim_approx")
+        if round_to is not None:
+            approx = F.round(approx, round_to)
+        return cand.select(
+            query_id_col, id_col,
+            approx.alias("sim_approx"), F.col("__arnk").alias("rnk"),
+        )
+    q = queries.select(
+        F.col(query_id_col),
+        F.col(vec_col).cast("array<double>").alias("__qv"),
+        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__qinv"),
+    )
+    c = corpus.select(
+        F.col(id_col),
+        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__inv"),
+    )
+    sim = V.dot(F.col("__qv"), F.col("__v")) * F.col("__qinv") * F.col("__inv")
+    if round_to is not None:
+        sim = F.round(sim, round_to)
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
+    return (
+        cand.select(query_id_col, id_col)
+        .join(c, id_col)
+        .join(F.broadcast(q), query_id_col)
+        .select(query_id_col, id_col, sim.alias("sim"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
+
+
 def pq_search(
     index: PqIndex,
     queries: DataFrame,
@@ -1097,8 +1150,10 @@ def pq_search(
     q_rows = queries.select(query_id_col, vec_col).collect()
     spark = index.codes.sparkSession
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {index.id_col} long, sim double, rnk int"
+        return _pq_rank(
+            spark.createDataFrame([], _pq_cand_schema(query_id_col, index.id_col)),
+            queries, corpus, k, k * rerank,
+            index.id_col, vec_col, query_id_col, round_to,
         )
     books = np.asarray(index.codebooks, dtype=np.float64)  # m × k × sub
     mm, _kk, ss = books.shape
@@ -1149,42 +1204,11 @@ def pq_search(
         ).astype({query_id_col: "int64", id_col: "int64", "sim_approx": "float64"})
 
     partial = index.codes.mapInPandas(
-        part_topk, schema=f"{query_id_col} long, {id_col} long, sim_approx double"
+        part_topk, schema=_pq_cand_schema(query_id_col, id_col)
     )
-    wa = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim_approx"), F.asc(id_col)
-    )
-    cand = partial.withColumn("__arnk", F.row_number().over(wa)).filter(
-        F.col("__arnk") <= n_keep
-    )
-    if corpus is None:
-        return cand.select(
-            query_id_col,
-            id_col,
-            (F.round("sim_approx", round_to) if round_to else F.col("sim_approx")).alias("sim_approx"),
-            F.col("__arnk").alias("rnk"),
-        )
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__qinv"),
-    )
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__inv"),
-    )
-    sim = V.dot(F.col("__qv"), F.col("__v")) * F.col("__qinv") * F.col("__inv")
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        cand.select(query_id_col, id_col)
-        .join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(query_id_col, id_col, sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+    return _pq_rank(
+        partial, queries, corpus, k, n_keep,
+        id_col, vec_col, query_id_col, round_to,
     )
 
 
@@ -1366,8 +1390,10 @@ def ivfpq_search(
     id_col = index.id_col
     q_rows = queries.select(query_id_col, vec_col).collect()
     if not q_rows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} long, {id_col} long, sim double, rnk int"
+        return _pq_rank(
+            spark.createDataFrame([], _pq_cand_schema(query_id_col, id_col)),
+            queries, corpus, k, k * rerank,
+            id_col, vec_col, query_id_col, round_to,
         )
     centers = np.asarray(index.centers, dtype=np.float64)
     books = np.asarray(index.codebooks, dtype=np.float64)
@@ -1383,7 +1409,6 @@ def ivfpq_search(
     probe_order = np.argsort(cd, axis=1, kind="stable")[:, :n_probe]
     LUT = np.einsum("qjs,jcs->qjc", Qn.reshape(len(Q), mm, ss), books)
     n_keep = k * rerank
-    qidx_of = {int(q): i for i, q in enumerate(qids)}
     b_state = spark.sparkContext.broadcast(
         (LUT, qcent, probe_order, qids)
     )
@@ -1433,41 +1458,11 @@ def ivfpq_search(
         ).astype({query_id_col: "int64", id_col: "int64", "sim_approx": "float64"})
 
     partial = index.codes.mapInPandas(
-        part_topk, schema=f"{query_id_col} long, {id_col} long, sim_approx double"
+        part_topk, schema=_pq_cand_schema(query_id_col, id_col)
     )
-    wa = Window.partitionBy(query_id_col).orderBy(
-        F.desc("sim_approx"), F.asc(id_col)
-    )
-    cand = partial.withColumn("__arnk", F.row_number().over(wa)).filter(
-        F.col("__arnk") <= n_keep
-    )
-    if corpus is None:
-        return cand.select(
-            query_id_col, id_col,
-            (F.round("sim_approx", round_to) if round_to else F.col("sim_approx")).alias("sim_approx"),
-            F.col("__arnk").alias("rnk"),
-        )
-    q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__qinv"),
-    )
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-        F.try_divide(F.lit(1.0), V.norm(vec_col)).alias("__inv"),
-    )
-    sim = V.dot(F.col("__qv"), F.col("__v")) * F.col("__qinv") * F.col("__inv")
-    if round_to is not None:
-        sim = F.round(sim, round_to)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("sim"), F.asc(id_col))
-    return (
-        cand.select(query_id_col, id_col)
-        .join(c, id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(query_id_col, id_col, sim.alias("sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+    return _pq_rank(
+        partial, queries, corpus, k, n_keep,
+        id_col, vec_col, query_id_col, round_to,
     )
 
 

@@ -66,6 +66,7 @@ __all__ = [
     "unigram_perplexity",
     "vocab_save",
     "vocab_load",
+    "unigram_sample_encode_ids",
 ]
 
 # Log-prob floor for characters absent from the vocabulary at encode

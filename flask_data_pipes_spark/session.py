@@ -21,7 +21,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
-__all__ = ["EngineConfig", "get_spark", "stop_spark"]
+__all__ = ["EngineConfig", "get_spark", "stop_spark", "ensure_package_on_executors"]
 
 
 @dataclass

@@ -36,6 +36,7 @@ __all__ = [
     "upsert_sql",
     "write_sorted_parquet",
     "compact_parquet",
+    "write_bucketed",
 ]
 
 

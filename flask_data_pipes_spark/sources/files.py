@@ -26,6 +26,7 @@ __all__ = [
     "read_text",
     "read_jdbc",
     "jdbc_scan_options",
+    "jdbc_partition_predicates",
 ]
 
 

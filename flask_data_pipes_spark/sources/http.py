@@ -49,6 +49,7 @@ __all__ = [
     "HTTPLogin",
     "fetch_jsonl",
     "paginated_frame",
+    "MissingSchema",
 ]
 
 

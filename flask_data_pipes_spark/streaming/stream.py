@@ -79,6 +79,10 @@ __all__ = [
     "read_warc_stream",
     "foreach_batch_warc_score",
     "foreach_batch_training_shards",
+    "enrich_stream",
+    "session_window_agg",
+    "session_window_stream",
+    "ohlc_stream",
 ]
 
 EVENTS_SCHEMA = (

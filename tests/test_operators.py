@@ -2342,6 +2342,37 @@ def test_pq_and_ivfpq_save_load_roundtrip(spark, tmp_path):
     assert got == want
 
 
+def test_pq_and_ivfpq_empty_queries_keep_result_schema(spark, sf_dir):
+    """An empty query set returns no rows under the SAME columns a
+    non-empty one gets: (qid, vec_id, sim_approx, rnk) without a
+    corpus, (qid, vec_id, sim, rnk) with the exact rerank."""
+    from flask_data_pipes_spark.operators.similarity import (
+        ivfpq_fit, ivfpq_search, pq_fit, pq_search,
+    )
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = e.select(F.col("vec_id").alias("qid"), "embedding")
+    some, none = q.filter(F.col("qid") < 2), q.filter(F.lit(False))
+    searches = [
+        (pq_search, pq_fit(e, m=8, n_centroids=16), {}),
+        (ivfpq_search, ivfpq_fit(e, n_cells=4, m=8, n_centroids=16),
+         {"n_probe": 2}),
+    ]
+    for search, idx, kw in searches:
+        for corpus, cols in [
+            (None, ["qid", "vec_id", "sim_approx", "rnk"]),
+            (e, ["qid", "vec_id", "sim", "rnk"]),
+        ]:
+            full = search(idx, some, k=3, corpus=corpus, **kw)
+            empty = search(idx, none, k=3, corpus=corpus, **kw)
+            assert full.columns == cols, (search.__name__, full.columns)
+            assert empty.schema.simpleString() == full.schema.simpleString()
+            assert full.count() > 0 and empty.count() == 0
+            # round_to=0 rounds in both branches (0 is not "no rounding")
+            sims = search(idx, some, k=3, corpus=corpus, round_to=0, **kw)
+            assert all(float(r[2]).is_integer() for r in sims.collect())
+
+
 def test_ivf_append_extends_saved_index(spark, tmp_path):
     """Appending a batch to a saved IVF index makes the new vectors
     searchable with NO refit: a query equal to an appended vector must

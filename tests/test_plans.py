@@ -722,6 +722,32 @@ def test_lm_family_no_unbounded_broadcast_hints(spark, sf_dir):
         )
 
 
+def test_lm_combined_scorers_join_seen_ngrams_only(spark, sf_dir):
+    """A combined LM scorer scores its own training corpus, so every
+    n-gram it looks up is in its model: the scoring join is INNER and
+    the plan never enters `kn_score`'s backoff cascade (LeftOuter
+    joins; 16 joins for KN where the combined scorer needs 6). Pins
+    the optimized-plan join counts of the three combined scorers."""
+    import re
+
+    from flask_data_pipes_spark.operators.corpus import (
+        bigram_logprob,
+        kn_trigram_logprob,
+        unigram_logprob,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for fn, n_joins in (
+        (kn_trigram_logprob, 6),
+        (bigram_logprob, 4),
+        (unigram_logprob, 2),
+    ):
+        plan = fn(docs)._jdf.queryExecution().optimizedPlan().toString()
+        joins = re.findall(r"\bJoin (\w+)", plan)
+        assert len(joins) == n_joins, (fn.__name__, joins, plan)
+        assert "LeftOuter" not in joins, (fn.__name__, plan)
+
+
 def test_bm25_broadcasts_query_restricted_df_only(spark, sf_dir):
     """bm25's per-term df table is vocabulary-sized; every broadcast
     hint in its plan must sit on a query-bounded or 1-row subtree —
